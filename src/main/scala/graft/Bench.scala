@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver bench contract: one JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
   *
@@ -64,16 +62,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true")) // AQE is the at-scale default; the env knob exists to measure its local re-planning overhead
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Engine.session("graft-bench", cpus.toInt)
+    // AQE is the at-scale default; the env knob exists to measure its
+    // local re-planning overhead (a runtime conf, so it applies here)
+    spark.conf.set("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
 
     // untimed warmup: session + scan paths
     graft.core.Engine.TableNames.foreach { t =>

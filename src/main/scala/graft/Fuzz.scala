@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Differential relational fuzz: deterministically generate N random
@@ -320,13 +319,7 @@ object Fuzz {
     val sfDir = args(0)
     val outDir = args(1)
     val n = if (args.length > 2) args(2).toInt else 200
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Engine.session("graft-fuzz", cores = 16)
     spark.sparkContext.setLogLevel("ERROR")
     graft.core.Engine.open(spark, sfDir)
     graft.sql.SqlFunctions.register(spark) // the kernel-fn class needs them

@@ -13,20 +13,16 @@ object Catalog {
   /** Builder for a Hive-metastore-backed session: persistent catalog
     * (embedded Derby metastore + file warehouse). Use when the engine
     * owns the session; in a shared session the same catalog ops below
-    * work against whatever catalog is active.
+    * work against whatever catalog is active. Starts from
+    * [[Engine.session]]'s builder, so it carries the same settings,
+    * the codegen cache bound included.
     */
   def warehouseSession(warehouseDir: String, metastoreDir: String,
       appName: String = "graft-warehouse", cores: Int = 32): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
+    val spark = Engine.builder(appName, cores)
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$metastoreDir;create=true")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .enableHiveSupport()
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -23,11 +23,23 @@ object Engine {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Build a local session tuned for the test harness. On a real
-    * cluster only the master/shuffle-partition settings change; the
-    * engine code is identical.
+  /** Entry bound of Spark's generated-code cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The cache is
+    * JVM-global and keyed by generated source text. One pass over the
+    * registry compiles about 2,330 distinct classes; at the default
+    * bound every warm pass recompiled them (a Janino compile on the
+    * driver plus a fresh JIT each). 4096 holds the registry, the
+    * QueryGate templates and headroom; measured gain and memory cost
+    * are on [[session]].
     */
-  def session(appName: String = "graft", cores: Int = 32): SparkSession = {
+  val CodegenCacheMaxEntries: Int = 4096
+
+  /** The builder every engine session starts from: the local master,
+    * the session settings the queries depend on, and the static
+    * (first-session-of-the-JVM) settings such as the codegen cache
+    * bound.
+    */
+  private[core] def builder(appName: String, cores: Int): SparkSession.Builder = {
     // JVM-global engine configuration belongs where the JVM is set up:
     // ImageIO's default stream cache is FILE-backed (a temp file
     // created and deleted per image encode/decode); every media kernel
@@ -37,15 +49,36 @@ object Engine {
     // but the session builder is the documented home for process-wide
     // engine state.
     javax.imageio.ImageIO.setUseCache(false)
-    val spark = SparkSession.builder()
+    SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries.toLong)
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  }
+
+  /** The engine's one session factory: every main and the test suites
+    * take their session here. On a real cluster only the
+    * master/shuffle-partition settings change; the engine code is
+    * identical.
+    *
+    * Codegen cache: the bound is [[CodegenCacheMaxEntries]]. It is a
+    * static SQL conf, read once when Spark's `CodeGenerator` is first
+    * used, so it only applies if this factory builds the JVM's first
+    * session. Measured at sf0.1 on a 4-core box (two passes over all
+    * 211 registry queries in one JVM, `collect()` per query): pass 0
+    * compiles ~2,330 classes; the second pass compiled 3,590 classes
+    * (34 s of Janino) at the default bound and 24 with this one
+    * (queries that put per-call values into generated code), and its
+    * wall fell from 140 s to 82 s. The cost is what the cache then
+    * holds after `System.gc()`: about 14 MB more metaspace and 70 MB
+    * more heap, well inside the 8g default driver heap.
+    */
+  def session(appName: String = "graft", cores: Int = 32): SparkSession = {
+    val spark = builder(appName, cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

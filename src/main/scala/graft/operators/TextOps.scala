@@ -593,9 +593,8 @@ object TextOps {
     * TakeOrderedAndProject top-k. The unigram side is
     * vocabulary-sized; nothing all-pairs. The corpus totals U and B
     * are sums over those same two aggregates, attached as broadcast
-    * singletons (constant-key hash joins) — the whole query is ONE
-    * job, no separate scalar actions, and AQE reuses each aggregate's
-    * exchange for its total.
+    * singletons (constant-key hash joins) — no separate scalar
+    * actions: after the two checkpoint builds the query is ONE job.
     */
   def pmiCollocations(df: DataFrame, textCol: String,
       minCount: Long = 5, topK: Int = 20): DataFrame = {
@@ -614,13 +613,16 @@ object TextOps {
     // re-exploded and re-aggregated the corpus FIVE times (measured:
     // two 5 s-CPU bigram stages + three unigram stages at sf0.1).
     // Both frames are vocabulary-sized — checkpointing them is cheap.
+    // Eager: a lazy checkpoint materializes inside the consuming job,
+    // where its consumers' concurrent stages can both compute the same
+    // partitions.
     val uni = src.select(explode(TextFunctions.tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cw"))
-      .localCheckpoint(false)
+      .localCheckpoint(true)
     val uniTotal = uni.agg(sum(col("cw")).cast("double").as("__u"))
     val bi0 = src.select(explode(grams).as("g"))
       .groupBy(col("g")).agg(count(lit(1)).as("cab"))
-      .localCheckpoint(false)
+      .localCheckpoint(true)
     val biTotal = bi0.agg(sum(col("cab")).cast("double").as("__b"))
     val bi = bi0.filter(col("cab") >= minCount)
     val withW = joinSingleton(joinSingleton(bi

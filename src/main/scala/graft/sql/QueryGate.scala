@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement, LogicalPlan}
 
 /** SELECT-only SQL gate.
@@ -40,10 +40,13 @@ object QueryGate {
     }
   }
 
-  /** Gate + execute. Throws [[RejectedQuery]] on anything non-SELECT. */
+  /** Gate + execute. Throws [[RejectedQuery]] on anything non-SELECT.
+    * The DataFrame is built from the plan `validate` checked, so the
+    * text is parsed once and what runs is exactly what was gated.
+    */
   def sql(spark: SparkSession, query: String): DataFrame =
     validate(spark, query) match {
-      case Right(_)     => spark.sql(query)
+      case Right(plan)  => GraftSqlShim.ofRows(spark, plan)
       case Left(reason) => throw RejectedQuery(reason)
     }
 

@@ -1,10 +1,15 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Diagnostic main: run one gate query cold and print every Spark job
   * with its call site — the tool behind job-count audits (a cold
   * query's fixed job overhead is shuffle-barrier overhead at scale).
+  * Also prints the query's Janino compile count and time, then calls
+  * it again and prints the second call's compile count (0 when every
+  * generated class is served from the codegen cache).
   * Usage: runMain graft.tools.JobTrace <sfDir> <queryName>
   */
 object JobTrace {
@@ -74,6 +79,10 @@ object JobTrace {
     }
     Thread.sleep(300)
     jobs.clear()
+    // Janino compiles = misses of Spark's JVM-global generated-code
+    // cache (one histogram sample each); compileTime is in nanos
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val (c0, ct0) = (compiles(), CodeGenerator.compileTime)
     val t0 = System.nanoTime()
     // "dedup_corpus_raw" = the un-memoized tail of q53: dedupCorpus
     // before dedupClasses' localCheckpoint truncates the plan — for
@@ -81,6 +90,7 @@ object JobTrace {
     val df = buildDf()
     val n = df.count()
     val sec = (System.nanoTime() - t0) / 1e9
+    val (c1, ct1) = (compiles(), CodeGenerator.compileTime)
     if (sys.env.contains("JOBTRACE_EXPLAIN")) df.explain("formatted")
     Thread.sleep(500) // let listener drain
     // start lines only — END lines also begin with "job" and would
@@ -89,6 +99,12 @@ object JobTrace {
       .filter(s => s.startsWith("job") && !s.contains(" END ")).count()
     jobs.forEach(s => println(s"[trace] $s"))
     println(f"[trace] $name: $jobCount jobs, $sec%.1f s, rows=$n")
+    // a second call should hit the codegen cache for every class; a
+    // non-zero warm count means the query bakes a per-call value into
+    // generated code and pays Janino + JIT on every call
+    buildDf().count()
+    println(f"[trace] $name codegen: ${c1 - c0} classes compiled in " +
+      f"${(ct1 - ct0) / 1e9}%.2f s; second call compiled ${compiles() - c1}")
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -20,14 +19,7 @@ object ProfileQuery {
     val name = args(1)
     val runs = if (args.length > 2) args(2).toInt else 3
 
-    val spark = SparkSession.builder()
-      .appName("graft-profile")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Engine.session("graft-profile", cores = 32)
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)

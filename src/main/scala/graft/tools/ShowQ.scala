@@ -1,11 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object ShowQ {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().appName("graft-showq").master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.Engine.session("graft-showq", cores = 8)
     spark.sparkContext.setLogLevel("ERROR")
     args.tail.foreach { q =>
       println(s"=== $q ===")
