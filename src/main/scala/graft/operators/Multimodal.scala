@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** Multimodal column operators — image/audio/video as opaque `binary`
   * columns with typed metadata (the beyond-reference mandate; the
@@ -122,9 +123,7 @@ object Multimodal {
         case None => meta(format = "jxl", ok = false,
           error = "unparseable JXL SizeHeader")
       }
-    if (bytes.length >= 8 && bytes(0) == 0x1A.toByte &&
-        bytes(1) == 0x45.toByte && bytes(2) == 0xDF.toByte &&
-        bytes(3) == 0xA3.toByte)
+    if (Ebml.isEbml(bytes))
       return webmInfo(bytes) match {
         // audio facts only on audio-PRIMARY files (a movie's channels
         // column means pixel channels everywhere else in this schema)
@@ -156,21 +155,13 @@ object Multimodal {
     * only — pixel decode rides [[decodePixels]]' ImageIO path.
     */
   private[graft] def decodeTiff(b: Array[Byte]): Row = {
-    val little = b(0) == 'I'
-    def u16(o: Int): Int =
-      if (o < 0 || o + 2 > b.length) -1
-      else if (little) (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-      else ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-    def u32(o: Int): Long =
-      if (o < 0 || o + 4 > b.length) -1L
-      else if (little) (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-      else ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    val ifdOff = u32(4)
-    if (ifdOff < 0 || ifdOff > b.length - 2)
+    val t = TiffIfd.at(b, 0, b.length)
+    if (t == null)
+      return meta(format = "tiff", ok = false, error = "no TIFF header")
+    import t.{u16, u32}
+    if (u32(4) > b.length - 2)
       return meta(format = "tiff", ok = false, error = "truncated IFD0 offset")
-    val ifd = ifdOff.toInt
+    val ifd = t.ifd0
     val nEntries = u16(ifd)
     if (nEntries <= 0)
       return meta(format = "tiff", ok = false, error = "empty or truncated IFD0")
@@ -495,25 +486,22 @@ object Multimodal {
 
   /** MP4 / ISO-BMFF box walk: top-level to `moov`, then `mvhd`
     * (timescale + duration, v0/v1 layouts) and the first `trak`'s
-    * `tkhd` (16.16 fixed-point width/height).
+    * `tkhd` (16.16 fixed-point width/height). Box headers follow
+    * [[Bmff]] (largesize, to-parent-end); a box overrunning its
+    * parent still yields its clamped prefix, then ends the walk.
     */
   private[graft] def decodeMp4(b: Array[Byte]): Row = {
-    def be32(o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) | ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    def be64(o: Int): Long = (be32(o) << 32) | be32(o + 4)
-    def boxId(o: Int): String = new String(b, o + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
-    // all child boxes with `id` within [from, until), in order
+    def be32(o: Int): Long = Bmff.u32(b, o)
+    // all child boxes with `id` within [from, until), in order, as
+    // (payload start, end)
     def findBoxes(id: String, from: Int, until: Int): Seq[(Int, Int)] = {
       val out = Seq.newBuilder[(Int, Int)]
-      var i = from
-      while (i + 8 <= until) {
-        val size = be32(i)
-        // size < 8 is malformed (size=1 64-bit boxes unsupported); a
-        // size that would wrap the cursor is hostile — stop either way
-        if (size < 8 || size > Int.MaxValue - i) return out.result()
-        if (boxId(i) == id) out += ((i, math.min(until, i + size.toInt)))
-        i += size.toInt
-      }
+      new Bmff.Walker(b) {
+        def visit(bid: String, body: Int, end: Int): Unit =
+          if (bid == id) out += ((body, end))
+        override def overrun(bid: String, body: Int, end: Int): Unit =
+          visit(bid, body, end)
+      }.walk(from, until)
       out.result()
     }
     def findBox(id: String, from: Int, until: Int): Option[(Int, Int)] =
@@ -522,11 +510,11 @@ object Multimodal {
       case None => meta(format = "mp4", ok = false, error = "no moov box")
       case Some((moov, moovEnd)) =>
         var durMs: java.lang.Long = null
-        findBox("mvhd", moov + 8, moovEnd).foreach { case (mvhd, _) =>
-          val version = b(mvhd + 8) & 0xff
+        findBox("mvhd", moov, moovEnd).foreach { case (mvhd, _) =>
+          val version = b(mvhd) & 0xff
           val (timescale, duration) =
-            if (version == 1) (be32(mvhd + 28), be64(mvhd + 32))
-            else (be32(mvhd + 20), be32(mvhd + 24))
+            if (version == 1) (be32(mvhd + 20), Bmff.u64(b, mvhd + 24))
+            else (be32(mvhd + 12), be32(mvhd + 16))
           // all-ones duration is the spec's "unknown" sentinel
           // (fragmented/live-muxed) — keep durMs null, don't divide
           if (timescale > 0 && duration != 0xFFFFFFFFL && duration != -1L)
@@ -536,15 +524,15 @@ object Multimodal {
         var h: Integer = null
         // audio traks carry zero dims and commonly precede the video
         // trak — keep walking until one has real dimensions
-        findBoxes("trak", moov + 8, moovEnd).foreach { case (trak, trakEnd) =>
-          if (w == null) findBox("tkhd", trak + 8, trakEnd).foreach { case (tkhd, _) =>
-            val version = b(tkhd + 8) & 0xff
+        findBoxes("trak", moov, moovEnd).foreach { case (trak, trakEnd) =>
+          if (w == null) findBox("tkhd", trak, trakEnd).foreach { case (tkhd, _) =>
+            val version = b(tkhd) & 0xff
             // after version+flags: creation, modification, track_ID,
             // reserved, duration (4-byte fields in v0; times+duration
             // widen to 8 in v1)
             val base =
-              if (version == 1) tkhd + 12 + (8 + 8 + 4 + 4 + 8)
-              else tkhd + 12 + (4 + 4 + 4 + 4 + 4)
+              if (version == 1) tkhd + 4 + (8 + 8 + 4 + 4 + 8)
+              else tkhd + 4 + (4 + 4 + 4 + 4 + 4)
             // skip reserved(8) + layer/altgroup/volume/reserved(8) + matrix(36)
             val dims = base + 16 + 36
             if (dims + 8 <= b.length) {
@@ -586,41 +574,8 @@ object Multimodal {
     * video/audio track.
     */
   private[graft] def webmInfo(b: Array[Byte]): Option[WebmInfo] = try {
-    if (b == null || b.length < 8 ||
-      !(b(0) == 0x1A.toByte && b(1) == 0x45.toByte &&
-        b(2) == 0xDF.toByte && b(3) == 0xA3.toByte)) return None
-    @inline def vintLen(o: Int): Int = {
-      if (o >= b.length) return -1
-      val b0 = b(o) & 0xff
-      if (b0 == 0) -1 else Integer.numberOfLeadingZeros(b0) - 23
-    }
-    def readId(o: Int): Long = { // id keeps its marker bit
-      val n = vintLen(o)
-      if (n < 1 || n > 4 || o + n > b.length) return -1L
-      var v = 0L
-      var i = 0
-      while (i < n) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-      v
-    }
-    def readSize(o: Int): (Long, Int) = { // (-1, n) = unknown size
-      val n = vintLen(o)
-      if (n < 1 || n > 8 || o + n > b.length) return (-2L, 0)
-      var v = (b(o) & 0xff & (0xff >>> n)).toLong
-      var i = 1
-      while (i < n) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-      (if (v == (1L << (7 * n)) - 1) -1L else v, n)
-    }
-    @inline def uintOf(from: Int, until: Int): Long = {
-      var v = 0L
-      var i = from
-      while (i < until) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
-      v
-    }
-    def floatOf(from: Int, until: Int): Double = (until - from) match {
-      case 4 => java.lang.Float.intBitsToFloat(uintOf(from, until).toInt).toDouble
-      case 8 => java.lang.Double.longBitsToDouble(uintOf(from, until))
-      case _ => Double.NaN
-    }
+    if (!Ebml.isEbml(b)) return None
+    import Ebml.{float => floatOf, latin1, uint => uintOf}
     var docType: String = null
     var timecodeScale = 1000000L // ns per tick, spec default
     var durationTicks = Double.NaN
@@ -670,54 +625,30 @@ object Multimodal {
       tType = -1; tNum = -1L; tCodec = null
       tW = -1; tH = -1; tCh = -1; tRate = -1.0
     }
-    def walk(start: Int, end: Int, inCues: Boolean, depth: Int): Unit = {
-      if (depth > 16) return
-      var off = start
-      while (off < end) {
-        val id = readId(off)
-        if (id < 0) return
-        val idLen = vintLen(off)
-        val (size, szLen) = readSize(off + idLen)
-        if (szLen == 0) return
-        val body = off + idLen + szLen
-        val isContainer = id match {
-          case 0x1A45DFA3L | 0x18538067L | 0x1549A966L | 0x1654AE6BL |
-               0xAEL | 0xE0L | 0xE1L | 0x1C53BB6BL => true
-          case _ => false
-        }
-        // containers clamp to the parent (truncated uploads keep their
-        // intact prefix; unknown size = extends to parent end, the
-        // live-muxed Segment convention); truncated LEAVES end the walk
-        val bodyEnd =
-          if (size < 0) { if (isContainer) end else return }
-          else if (size > end - body) { if (isContainer) end else return }
-          else body + size.toInt
-        id match {
-          case 0xBBL if inCues => cuePoints += 1 // CuePoint: count only
-          case _ if isContainer =>
-            if (id == 0xAEL) inTrack = true
-            walk(body, bodyEnd, inCues = id == 0x1C53BB6BL, depth + 1)
-            if (id == 0xAEL) { finishTrack(); inTrack = false }
-          case 0x4282L => // DocType
-            docType = new String(b, body, bodyEnd - body, "ISO-8859-1")
-          case 0x2AD7B1L =>
-            val v = uintOf(body, bodyEnd)
-            if (v > 0) timecodeScale = v
-          case 0x4489L => durationTicks = floatOf(body, bodyEnd)
-          case 0x83L if inTrack => tType = uintOf(body, bodyEnd).toInt
-          case 0xD7L if inTrack => tNum = uintOf(body, bodyEnd)
-          case 0x86L if inTrack =>
-            tCodec = new String(b, body, bodyEnd - body, "ISO-8859-1")
-          case 0xB0L if inTrack => tW = uintOf(body, bodyEnd).toInt
-          case 0xBAL if inTrack => tH = uintOf(body, bodyEnd).toInt
-          case 0x9FL if inTrack => tCh = uintOf(body, bodyEnd).toInt
-          case 0xB5L if inTrack => tRate = floatOf(body, bodyEnd)
-          case _ => () // leaf we don't need (Cluster, SeekHead, ...)
-        }
-        off = bodyEnd
+    new Ebml.Walker(b, 0x1A45DFA3L, 0x18538067L, 0x1549A966L, 0x1654AE6BL,
+        0xAEL, 0xE0L, 0xE1L, 0x1C53BB6BL) {
+      override def container(id: Long, body: Int, end: Int): Unit = {
+        if (id == 0xAEL) inTrack = true
+        descend(id, body, end)
+        if (id == 0xAEL) { finishTrack(); inTrack = false }
       }
-    }
-    walk(0, b.length, inCues = false, 0)
+      def leaf(id: Long, body: Int, end: Int): Unit = id match {
+        case 0xBBL if parent == 0x1C53BB6BL => cuePoints += 1 // CuePoint: count only
+        case 0x4282L => docType = latin1(b, body, end) // DocType
+        case 0x2AD7B1L =>
+          val v = uintOf(b, body, end)
+          if (v > 0) timecodeScale = v
+        case 0x4489L => durationTicks = floatOf(b, body, end)
+        case 0x83L if inTrack => tType = uintOf(b, body, end).toInt
+        case 0xD7L if inTrack => tNum = uintOf(b, body, end)
+        case 0x86L if inTrack => tCodec = latin1(b, body, end)
+        case 0xB0L if inTrack => tW = uintOf(b, body, end).toInt
+        case 0xBAL if inTrack => tH = uintOf(b, body, end).toInt
+        case 0x9FL if inTrack => tCh = uintOf(b, body, end).toInt
+        case 0xB5L if inTrack => tRate = floatOf(b, body, end)
+        case _ => () // leaf we don't need (Cluster, SeekHead, ...)
+      }
+    }.walk()
     if (kind == null) None
     else {
       val durMs: java.lang.Long =
@@ -728,7 +659,7 @@ object Multimodal {
         width, height, durMs, codec, channels, rate, cuePoints,
         subtitleTracks))
     }
-  } catch { case _: Throwable => None }
+  } catch { case NonFatal(_) => None }
 
   /** Muxed subtitle cues from a Matroska/WebM file —
     * (docType, declaredLang, cues): the extraction half of the
@@ -812,36 +743,8 @@ object Multimodal {
     }
 
   private[graft] def webmTextTracks(b: Array[Byte]): Option[(String, Seq[(String, String, Seq[SubCue])])] = try {
-    if (b == null || b.length < 8 ||
-      !(b(0) == 0x1A.toByte && b(1) == 0x45.toByte &&
-        b(2) == 0xDF.toByte && b(3) == 0xA3.toByte)) return None
-    @inline def vintLen(o: Int): Int = {
-      if (o >= b.length) return -1
-      val b0 = b(o) & 0xff
-      if (b0 == 0) -1 else Integer.numberOfLeadingZeros(b0) - 23
-    }
-    def readId(o: Int): Long = {
-      val n = vintLen(o)
-      if (n < 1 || n > 4 || o + n > b.length) return -1L
-      var v = 0L
-      var i = 0
-      while (i < n) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-      v
-    }
-    def readSize(o: Int): (Long, Int) = {
-      val n = vintLen(o)
-      if (n < 1 || n > 8 || o + n > b.length) return (-2L, 0)
-      var v = (b(o) & 0xff & (0xff >>> n)).toLong
-      var i = 1
-      while (i < n) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-      (if (v == (1L << (7 * n)) - 1) -1L else v, n)
-    }
-    @inline def uintOf(from: Int, until: Int): Long = {
-      var v = 0L
-      var i = from
-      while (i < until) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
-      v
-    }
+    if (!Ebml.isEbml(b)) return None
+    import Ebml.{latin1, uint => uintOf, vintLen}
     var docType: String = null
     var scaleNs = 1000000L
     var clusterTc = 0L
@@ -878,11 +781,9 @@ object Multimodal {
       nCues += 1
     }
     def parseBlock(from: Int, until: Int): Option[(Long, Long, String)] = {
-      val tn = vintLen(from)
+      val tn = vintLen(b, from)
       if (tn < 1 || tn > 8 || from + tn + 3 > until) return None
-      var track = (b(from) & 0xff & (0xff >>> tn)).toLong
-      var i = 1
-      while (i < tn) { track = (track << 8) | (b(from + i) & 0xffL); i += 1 }
+      val track = Ebml.vintValue(b, from, tn)
       val cdc = subTrackCodec.getOrElse(track, null)
       if (!subTracks.contains(track) || (cdc != null && cdc != "webvtt"))
         return None // non-text tracks take the raw-payload path
@@ -907,11 +808,9 @@ object Multimodal {
     // object count drives the display state machine — objects > 0
     // opens (re-opens) a display at this block's time, zero clears it
     def pgsBlock(from: Int, until: Int): Unit = {
-      val tn = vintLen(from)
+      val tn = vintLen(b, from)
       if (tn < 1 || tn > 8 || from + tn + 3 > until) return
-      var track = (b(from) & 0xff & (0xff >>> tn)).toLong
-      var i = 1
-      while (i < tn) { track = (track << 8) | (b(from + i) & 0xffL); i += 1 }
+      val track = Ebml.vintValue(b, from, tn)
       if (!subTracks.contains(track) || subTrackCodec(track) != "pgs") return
       val rel = ((b(from + tn) & 0xff) << 8 | (b(from + tn + 1) & 0xff)).toShort.toLong
       if ((b(from + tn + 2) & 0x06) != 0) return
@@ -937,81 +836,60 @@ object Multimodal {
         }
       }
     }
-    def walk(start: Int, end: Int, depth: Int): Unit = {
-      if (depth > 16 || nCues >= 100000) return
-      var off = start
-      while (off < end && nCues < 100000) {
-        val id = readId(off)
-        if (id < 0) return
-        val idLen = vintLen(off)
-        val (size, szLen) = readSize(off + idLen)
-        if (szLen == 0) return
-        val body = off + idLen + szLen
-        val isContainer = id match {
-          case 0x1A45DFA3L | 0x18538067L | 0x1549A966L | 0x1654AE6BL |
-               0xAEL | 0x1F43B675L | 0xA0L => true
-          case _ => false
+    new Ebml.Walker(b, 0x1A45DFA3L, 0x18538067L, 0x1549A966L, 0x1654AE6BL,
+        0xAEL, 0x1F43B675L, 0xA0L) {
+      override def done: Boolean = nCues >= 100000
+      override def container(id: Long, body: Int, end: Int): Unit = {
+        if (id == 0xA0L) {
+          bgTrack = -1L; bgStart = Long.MinValue; bgText = null
+          bgDurTicks = 0L
         }
-        val bodyEnd =
-          if (size < 0) { if (isContainer) end else return }
-          else if (size > end - body) { if (isContainer) end else return }
-          else body + size.toInt
-        id match {
-          case _ if isContainer =>
-            if (id == 0xA0L) {
-              bgTrack = -1L; bgStart = Long.MinValue; bgText = null
-              bgDurTicks = 0L
-            }
-            if (id == 0xAEL) inTrack = true
-            walk(body, bodyEnd, depth + 1)
-            if (id == 0xAEL) { // TrackEntry closes
-              // a hostile file redeclaring a TrackNumber must not
-              // register the same cue buffer under two track indices;
-              // EVERY TrackType-0x11 track registers (text codecs
-              // carry cues, PGS carries intervals, the rest are
-              // declaration-only) so the count matches webmInfo's
-              if (tType == 0x11 && tNum > 0 && !subTracks.contains(tNum)) {
-                subTracks += tNum
-                subTrackOrder += tNum
-                subTrackLang(tNum) = if (tLang != null) tLang else "eng"
-                subTrackCodec(tNum) = webmSubCodecLabel(tCodec)
-              }
-              tNum = -1L; tType = -1; tCodec = null; tLang = null
-              inTrack = false
-            } else if (id == 0xA0L && bgText != null) { // BlockGroup closes
-              val st = bgStart * scaleNs / 1000000L
-              addCue(bgTrack, st, st + bgDurTicks * scaleNs / 1000000L, bgText)
-            }
-          case 0x4282L =>
-            docType = new String(b, body, bodyEnd - body, "ISO-8859-1")
-          case 0x2AD7B1L =>
-            val v = uintOf(body, bodyEnd)
-            if (v > 0) scaleNs = v
-          case 0xD7L if inTrack => tNum = uintOf(body, bodyEnd)
-          case 0x83L if inTrack => tType = uintOf(body, bodyEnd).toInt
-          case 0x86L if inTrack =>
-            tCodec = new String(b, body, bodyEnd - body, "ISO-8859-1")
-          case 0x22B59CL if inTrack =>
-            tLang = new String(b, body, bodyEnd - body, "ISO-8859-1")
-          case 0xE7L => clusterTc = uintOf(body, bodyEnd)
-          case 0xA1L => // Block inside a BlockGroup
-            parseBlock(body, bodyEnd).foreach { case (track, tick, text) =>
-              bgTrack = track; bgStart = tick; bgText = text
-            }
-            pgsBlock(body, bodyEnd) // PGS state machine, either carrier
-          case 0x9BL => bgDurTicks = uintOf(body, bodyEnd)
-          case 0xA3L => // SimpleBlock: no duration element
-            parseBlock(body, bodyEnd).foreach { case (track, tick, text) =>
-              val st = tick * scaleNs / 1000000L
-              addCue(track, st, st, text)
-            }
-            pgsBlock(body, bodyEnd)
-          case _ => ()
+        if (id == 0xAEL) inTrack = true
+        descend(id, body, end)
+        if (id == 0xAEL) { // TrackEntry closes
+          // a hostile file redeclaring a TrackNumber must not
+          // register the same cue buffer under two track indices;
+          // EVERY TrackType-0x11 track registers (text codecs
+          // carry cues, PGS carries intervals, the rest are
+          // declaration-only) so the count matches webmInfo's
+          if (tType == 0x11 && tNum > 0 && !subTracks.contains(tNum)) {
+            subTracks += tNum
+            subTrackOrder += tNum
+            subTrackLang(tNum) = if (tLang != null) tLang else "eng"
+            subTrackCodec(tNum) = webmSubCodecLabel(tCodec)
+          }
+          tNum = -1L; tType = -1; tCodec = null; tLang = null
+          inTrack = false
+        } else if (id == 0xA0L && bgText != null) { // BlockGroup closes
+          val st = bgStart * scaleNs / 1000000L
+          addCue(bgTrack, st, st + bgDurTicks * scaleNs / 1000000L, bgText)
         }
-        off = bodyEnd
       }
-    }
-    walk(0, b.length, 0)
+      def leaf(id: Long, body: Int, end: Int): Unit = id match {
+        case 0x4282L => docType = latin1(b, body, end)
+        case 0x2AD7B1L =>
+          val v = uintOf(b, body, end)
+          if (v > 0) scaleNs = v
+        case 0xD7L if inTrack => tNum = uintOf(b, body, end)
+        case 0x83L if inTrack => tType = uintOf(b, body, end).toInt
+        case 0x86L if inTrack => tCodec = latin1(b, body, end)
+        case 0x22B59CL if inTrack => tLang = latin1(b, body, end)
+        case 0xE7L => clusterTc = uintOf(b, body, end)
+        case 0xA1L => // Block inside a BlockGroup
+          parseBlock(body, end).foreach { case (track, tick, text) =>
+            bgTrack = track; bgStart = tick; bgText = text
+          }
+          pgsBlock(body, end) // PGS state machine, either carrier
+        case 0x9BL => bgDurTicks = uintOf(b, body, end)
+        case 0xA3L => // SimpleBlock: no duration element
+          parseBlock(body, end).foreach { case (track, tick, text) =>
+            val st = tick * scaleNs / 1000000L
+            addCue(track, st, st, text)
+          }
+          pgsBlock(body, end)
+        case _ => ()
+      }
+    }.walk()
     // a display still open at stream end (real streams always clear;
     // truncated uploads may not): zero-length, not lost
     pgsOpen.foreach { case (track, open) =>
@@ -1039,7 +917,7 @@ object Multimodal {
       }
       Some(((if (docType == null) "matroska" else docType), perTrack))
     }
-  } catch { case _: Throwable => None } // per-row isolation
+  } catch { case NonFatal(_) => None } // per-row isolation
 
   /** PGS run-length decode → palette indices, row-major w×h (public
     * segment layout, the one every Blu-ray authoring/decode stack
@@ -1114,36 +992,8 @@ object Multimodal {
     */
   private[graft] def webmPgsBitmaps(
       b: Array[Byte]): Option[Seq[(Int, Int, Long, Long, Int, Int, Array[Byte])]] = try {
-    if (b == null || b.length < 8 ||
-      !(b(0) == 0x1A.toByte && b(1) == 0x45.toByte &&
-        b(2) == 0xDF.toByte && b(3) == 0xA3.toByte)) return None
-    @inline def vintLen(o: Int): Int = {
-      if (o >= b.length) return -1
-      val b0 = b(o) & 0xff
-      if (b0 == 0) -1 else Integer.numberOfLeadingZeros(b0) - 23
-    }
-    def readId(o: Int): Long = {
-      val n = vintLen(o)
-      if (n < 1 || n > 4 || o + n > b.length) return -1L
-      var v = 0L
-      var i = 0
-      while (i < n) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-      v
-    }
-    def readSize(o: Int): (Long, Int) = {
-      val n = vintLen(o)
-      if (n < 1 || n > 8 || o + n > b.length) return (-2L, 0)
-      var v = (b(o) & 0xff & (0xff >>> n)).toLong
-      var i = 1
-      while (i < n) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-      (if (v == (1L << (7 * n)) - 1) -1L else v, n)
-    }
-    @inline def uintOf(from: Int, until: Int): Long = {
-      var v = 0L
-      var i = from
-      while (i < until) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
-      v
-    }
+    if (!Ebml.isEbml(b)) return None
+    import Ebml.{latin1, uint => uintOf, vintLen}
     var scaleNs = 1000000L
     var clusterTc = 0L
     // the SAME registration walk as webmTextTracks, so track_idx
@@ -1202,11 +1052,9 @@ object Multimodal {
       }
     }
     def pgsBlock(from: Int, until: Int): Unit = {
-      val tn = vintLen(from)
+      val tn = vintLen(b, from)
       if (tn < 1 || tn > 8 || from + tn + 3 > until) return
-      var track = (b(from) & 0xff & (0xff >>> tn)).toLong
-      var i = 1
-      while (i < tn) { track = (track << 8) | (b(from + i) & 0xffL); i += 1 }
+      val track = Ebml.vintValue(b, from, tn)
       if (!pgsTracks.contains(track)) return
       val rel = ((b(from + tn) & 0xff) << 8 | (b(from + tn + 1) & 0xff)).toShort.toLong
       if ((b(from + tn + 2) & 0x06) != 0) return
@@ -1272,11 +1120,9 @@ object Multimodal {
     // payload with the webvtt line-drop), so the shared counter
     // advances at identical stream points in both walkers
     def textCueAt(from: Int, until: Int): Boolean = {
-      val tn = vintLen(from)
+      val tn = vintLen(b, from)
       if (tn < 1 || tn > 8 || from + tn + 3 > until) return false
-      var track = (b(from) & 0xff & (0xff >>> tn)).toLong
-      var i = 1
-      while (i < tn) { track = (track << 8) | (b(from + i) & 0xffL); i += 1 }
+      val track = Ebml.vintValue(b, from, tn)
       if (!textTracks.contains(track)) return false
       if ((b(from + tn + 2) & 0x06) != 0) return false
       val raw = new String(b, from + tn + 3, until - from - tn - 3,
@@ -1290,69 +1136,50 @@ object Multimodal {
       text.nonEmpty
     }
     var bgTextPending = false
-    def walk(start: Int, end: Int, depth: Int): Unit = {
-      if (depth > 16 || nCues >= 100000) return
-      var off = start
-      while (off < end && nCues < 100000) {
-        val id = readId(off)
-        if (id < 0) return
-        val idLen = vintLen(off)
-        val (size, szLen) = readSize(off + idLen)
-        if (szLen == 0) return
-        val body = off + idLen + szLen
-        val isContainer = id match {
-          case 0x1A45DFA3L | 0x18538067L | 0x1549A966L | 0x1654AE6BL |
-               0xAEL | 0x1F43B675L | 0xA0L => true
-          case _ => false
-        }
-        val bodyEnd =
-          if (size < 0) { if (isContainer) end else return }
-          else if (size > end - body) { if (isContainer) end else return }
-          else body + size.toInt
-        id match {
-          case _ if isContainer =>
-            if (id == 0xA0L) bgTextPending = false
-            if (id == 0xAEL) inTrack = true
-            walk(body, bodyEnd, depth + 1)
-            if (id == 0xAEL) {
-              if (tType == 0x11 && tNum > 0 && !subTracks.contains(tNum)) {
-                subTracks += tNum
-                subTrackOrder += tNum
-                // the SHARED classifier, so pgs/webvtt/text can never
-                // diverge from webmTextTracks' view of the same file
-                webmSubCodecLabel(tCodec) match {
-                  case "pgs" => pgsTracks += tNum
-                  case "webvtt" => textTracks += tNum; vttTracks += tNum
-                  case null => textTracks += tNum
-                  case _ => () // declaration-only in both walkers
-                }
-              }
-              tNum = -1L; tType = -1; tCodec = null
-              inTrack = false
-            } else if (id == 0xA0L && bgTextPending) {
-              nCues += 1 // the BlockGroup cue webmTextTracks counts
-              bgTextPending = false
+    new Ebml.Walker(b, 0x1A45DFA3L, 0x18538067L, 0x1549A966L, 0x1654AE6BL,
+        0xAEL, 0x1F43B675L, 0xA0L) {
+      override def done: Boolean = nCues >= 100000
+      override def container(id: Long, body: Int, end: Int): Unit = {
+        if (id == 0xA0L) bgTextPending = false
+        if (id == 0xAEL) inTrack = true
+        descend(id, body, end)
+        if (id == 0xAEL) {
+          if (tType == 0x11 && tNum > 0 && !subTracks.contains(tNum)) {
+            subTracks += tNum
+            subTrackOrder += tNum
+            // the SHARED classifier, so pgs/webvtt/text can never
+            // diverge from webmTextTracks' view of the same file
+            webmSubCodecLabel(tCodec) match {
+              case "pgs" => pgsTracks += tNum
+              case "webvtt" => textTracks += tNum; vttTracks += tNum
+              case null => textTracks += tNum
+              case _ => () // declaration-only in both walkers
             }
-          case 0x2AD7B1L =>
-            val v = uintOf(body, bodyEnd)
-            if (v > 0) scaleNs = v
-          case 0xD7L if inTrack => tNum = uintOf(body, bodyEnd)
-          case 0x83L if inTrack => tType = uintOf(body, bodyEnd).toInt
-          case 0x86L if inTrack =>
-            tCodec = new String(b, body, bodyEnd - body, "ISO-8859-1")
-          case 0xE7L => clusterTc = uintOf(body, bodyEnd)
-          case 0xA1L =>
-            pgsBlock(body, bodyEnd)
-            if (textCueAt(body, bodyEnd)) bgTextPending = true
-          case 0xA3L =>
-            pgsBlock(body, bodyEnd)
-            if (textCueAt(body, bodyEnd)) nCues += 1
-          case _ => ()
+          }
+          tNum = -1L; tType = -1; tCodec = null
+          inTrack = false
+        } else if (id == 0xA0L && bgTextPending) {
+          nCues += 1 // the BlockGroup cue webmTextTracks counts
+          bgTextPending = false
         }
-        off = bodyEnd
       }
-    }
-    walk(0, b.length, 0)
+      def leaf(id: Long, body: Int, end: Int): Unit = id match {
+        case 0x2AD7B1L =>
+          val v = uintOf(b, body, end)
+          if (v > 0) scaleNs = v
+        case 0xD7L if inTrack => tNum = uintOf(b, body, end)
+        case 0x83L if inTrack => tType = uintOf(b, body, end).toInt
+        case 0x86L if inTrack => tCodec = latin1(b, body, end)
+        case 0xE7L => clusterTc = uintOf(b, body, end)
+        case 0xA1L =>
+          pgsBlock(body, end)
+          if (textCueAt(body, end)) bgTextPending = true
+        case 0xA3L =>
+          pgsBlock(body, end)
+          if (textCueAt(body, end)) nCues += 1
+        case _ => ()
+      }
+    }.walk()
     // open at stream end: zero-length, like the interval surface
     pgsOpen.foreach { case (track, (st, obj, pal)) =>
       if (nCues < 100000) emit(track, st, st, obj, pal)
@@ -1365,7 +1192,7 @@ object Multimodal {
         (trackPos(track), k, st, en, w, h, png)
       })
     }
-  } catch { case _: Throwable => None } // per-row isolation
+  } catch { case NonFatal(_) => None } // per-row isolation
 
   /** Image-subtitle bitmaps as a DataFrame — the multimodal column
     * feeding OCR/vision models: one row per decodable PGS display of
@@ -1413,75 +1240,32 @@ object Multimodal {
     * depth-cap discipline as [[webmInfo]].
     */
   private[graft] def webmAttachedPicture(b: Array[Byte]): Option[(String, Array[Byte])] = try {
-    if (b == null || b.length < 8 ||
-      !(b(0) == 0x1A.toByte && b(1) == 0x45.toByte &&
-        b(2) == 0xDF.toByte && b(3) == 0xA3.toByte)) return None
-    @inline def vintLen(o: Int): Int = {
-      if (o >= b.length) return -1
-      val b0 = b(o) & 0xff
-      if (b0 == 0) -1 else Integer.numberOfLeadingZeros(b0) - 23
-    }
-    def readId(o: Int): Long = {
-      val n = vintLen(o)
-      if (n < 1 || n > 4 || o + n > b.length) return -1L
-      var v = 0L
-      var i = 0
-      while (i < n) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-      v
-    }
-    def readSize(o: Int): (Long, Int) = {
-      val n = vintLen(o)
-      if (n < 1 || n > 8 || o + n > b.length) return (-2L, 0)
-      var v = (b(o) & 0xff & (0xff >>> n)).toLong
-      var i = 1
-      while (i < n) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-      (if (v == (1L << (7 * n)) - 1) -1L else v, n)
-    }
+    if (!Ebml.isEbml(b)) return None
     // per-AttachedFile scratch, committed when the element closes
     var fMime: String = null
     var fFrom = -1
     var fUntil = -1
     var mime: String = null
     var art: Array[Byte] = null
-    def walk(start: Int, end: Int, depth: Int): Unit = {
-      if (depth > 16 || art != null) return
-      var off = start
-      while (off < end && art == null) {
-        val id = readId(off)
-        if (id < 0) return
-        val idLen = vintLen(off)
-        val (size, szLen) = readSize(off + idLen)
-        if (szLen == 0) return
-        val body = off + idLen + szLen
-        val isContainer = id match {
-          case 0x1A45DFA3L | 0x18538067L | 0x1941A469L | 0x61A7L => true
-          case _ => false
+    new Ebml.Walker(b, 0x1A45DFA3L, 0x18538067L, 0x1941A469L, 0x61A7L) {
+      override def done: Boolean = art != null // first picture found
+      override def container(id: Long, body: Int, end: Int): Unit = {
+        if (id == 0x61A7L) { fMime = null; fFrom = -1; fUntil = -1 }
+        descend(id, body, end)
+        if (id == 0x61A7L && art == null && fMime != null &&
+          fMime.startsWith("image/") && fFrom >= 0) {
+          mime = fMime
+          art = java.util.Arrays.copyOfRange(b, fFrom, fUntil)
         }
-        val bodyEnd =
-          if (size < 0) { if (isContainer) end else return }
-          else if (size > end - body) { if (isContainer) end else return }
-          else body + size.toInt
-        id match {
-          case _ if isContainer =>
-            if (id == 0x61A7L) { fMime = null; fFrom = -1; fUntil = -1 }
-            walk(body, bodyEnd, depth + 1)
-            if (id == 0x61A7L && art == null && fMime != null &&
-              fMime.startsWith("image/") && fFrom >= 0) {
-              mime = fMime
-              art = java.util.Arrays.copyOfRange(b, fFrom, fUntil)
-            }
-          case 0x4660L => // FileMimeType
-            fMime = new String(b, body, bodyEnd - body, "ISO-8859-1")
-          case 0x465CL => // FileData
-            fFrom = body; fUntil = bodyEnd
-          case _ => ()
-        }
-        off = bodyEnd
       }
-    }
-    walk(0, b.length, 0)
+      def leaf(id: Long, body: Int, end: Int): Unit = id match {
+        case 0x4660L => fMime = Ebml.latin1(b, body, end) // FileMimeType
+        case 0x465CL => fFrom = body; fUntil = end // FileData
+        case _ => ()
+      }
+    }.walk()
     if (art == null) None else Some((mime, art))
-  } catch { case _: Throwable => None } // per-row isolation
+  } catch { case NonFatal(_) => None } // per-row isolation
 
   /** Every trak's `hdlr` handler type in an ISO-BMFF movie —
     * `vide`/`soun` plus the subtitle carriers (`sbtl` QuickTime/MOV
@@ -1489,37 +1273,17 @@ object Multimodal {
     * walk like its BMFF siblings.
     */
   private[graft] def mp4TrackHandlers(b: Array[Byte]): Seq[String] = try {
-    if (b == null || b.length < 16 ||
-      !(b(4) == 'f' && b(5) == 't' && b(6) == 'y' && b(7) == 'p')) return Nil
-    @inline def u32(o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    @inline def u64(o: Int): Long = (u32(o) << 32) | u32(o + 4)
+    if (!Bmff.isBmff(b)) return Nil
     val out = Seq.newBuilder[String]
-    def walk(start: Long, end: Long, depth: Int): Unit = {
-      if (depth > 16) return
-      var off = start
-      while (off + 8 <= end) {
-        val size0 = u32(off.toInt)
-        val id = new String(b, off.toInt + 4, 4, "ISO-8859-1")
-        var body = off + 8
-        val boxEnd =
-          if (size0 == 1 && off + 16 <= end) { body = off + 16; off + u64(off.toInt + 8) }
-          else if (size0 == 0) end
-          else off + size0
-        if (boxEnd < body || boxEnd > end) return
-        id match {
-          case "moov" | "trak" | "mdia" => walk(body, boxEnd, depth + 1)
-          case "hdlr" if body + 12 <= boxEnd =>
-            out += new String(b, body.toInt + 8, 4, "ISO-8859-1")
-          case _ => ()
-        }
-        off = boxEnd
+    new Bmff.Walker(b) {
+      def visit(id: String, body: Int, end: Int): Unit = id match {
+        case "moov" | "trak" | "mdia" => descend(id, body, end)
+        case "hdlr" if body + 12 <= end => out += Bmff.fourcc(b, body + 8)
+        case _ => ()
       }
-    }
-    walk(0L, b.length.toLong, 0)
+    }.walk()
     out.result()
-  } catch { case _: Throwable => Nil }
+  } catch { case NonFatal(_) => Nil }
 
   /** Container-DECLARED subtitle track count — the detection half of
     * the video-text surface ([[subtitleCues]] parses the sidecar
@@ -1536,12 +1300,11 @@ object Multimodal {
     */
   def subtitleTrackCount(b: Array[Byte]): Integer = try {
     if (b == null || b.length < 16) return null
-    if (b(4) == 'f' && b(5) == 't' && b(6) == 'y' && b(7) == 'p') {
+    if (Bmff.isBmff(b)) {
       val (tracks, chapRefs) = mp4TextTracks(b, decodeCues = false)
       return Integer.valueOf(tracks.count(t => !chapRefs.contains(t.id)))
     }
-    if (b(0) == 0x1A.toByte && b(1) == 0x45.toByte &&
-      b(2) == 0xDF.toByte && b(3) == 0xA3.toByte)
+    if (Ebml.isEbml(b))
       return webmInfo(b).map(i => Integer.valueOf(i.subtitleTracks)).orNull
     null
   } catch { case _: Throwable => null }
@@ -1577,82 +1340,36 @@ object Multimodal {
     // segmentation, not the dialog stream, and must not supply the
     // declared language; the roles come from the SAME
     // [[mp4TextTracks]] walk the extraction uses
-    if (b.length >= 16 && b(4) == 'f' && b(5) == 't' && b(6) == 'y' &&
-      b(7) == 'p') {
+    if (Bmff.isBmff(b)) {
       val (tracks, chapRefs) = mp4TextTracks(b, decodeCues = false)
       return tracks.find(t => !chapRefs.contains(t.id) && t.lang != null)
         .map(_.lang).orNull
     }
     // Matroska/WebM: subtitle TrackEntry's Language element
-    if (b(0) == 0x1A.toByte && b(1) == 0x45.toByte &&
-      b(2) == 0xDF.toByte && b(3) == 0xA3.toByte) {
-      @inline def vintLen(o: Int): Int = {
-        if (o >= b.length) return -1
-        val b0 = b(o) & 0xff
-        if (b0 == 0) -1 else Integer.numberOfLeadingZeros(b0) - 23
-      }
-      def readId(o: Int): Long = {
-        val n = vintLen(o)
-        if (n < 1 || n > 4 || o + n > b.length) return -1L
-        var v = 0L
-        var i = 0
-        while (i < n) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-        v
-      }
-      def readSize(o: Int): (Long, Int) = {
-        val n = vintLen(o)
-        if (n < 1 || n > 8 || o + n > b.length) return (-2L, 0)
-        var v = (b(o) & 0xff & (0xff >>> n)).toLong
-        var i = 1
-        while (i < n) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-        (if (v == (1L << (7 * n)) - 1) -1L else v, n)
-      }
+    if (Ebml.isEbml(b)) {
       var tType = -1
       var tLang: String = null
       var found: String = null
-      def walk(start: Int, end: Int, depth: Int): Unit = {
-        if (depth > 16) return
-        var off = start
-        while (found == null && off < end) {
-          val id = readId(off)
-          if (id < 0) return
-          val idLen = vintLen(off)
-          val (size, szLen) = readSize(off + idLen)
-          if (szLen == 0) return
-          val body = off + idLen + szLen
-          val isContainer = id match {
-            case 0x1A45DFA3L | 0x18538067L | 0x1654AE6BL | 0xAEL => true
-            case _ => false
+      new Ebml.Walker(b, 0x1A45DFA3L, 0x18538067L, 0x1654AE6BL, 0xAEL) {
+        override def done: Boolean = found != null
+        override def container(id: Long, body: Int, end: Int): Unit = {
+          descend(id, body, end)
+          if (id == 0xAEL) { // TrackEntry closes
+            if (found == null && tType == 0x11)
+              found = if (tLang != null) tLang else "eng" // spec default
+            tType = -1; tLang = null
           }
-          val bodyEnd =
-            if (size < 0) { if (isContainer) end else return }
-            else if (size > end - body) { if (isContainer) end else return }
-            else body + size.toInt
-          id match {
-            case _ if isContainer =>
-              walk(body, bodyEnd, depth + 1)
-              if (id == 0xAEL) { // TrackEntry closes
-                if (found == null && tType == 0x11)
-                  found = if (tLang != null) tLang else "eng" // spec default
-                tType = -1; tLang = null
-              }
-            case 0x83L =>
-              var v = 0L
-              var i = body
-              while (i < bodyEnd) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
-              tType = v.toInt
-            case 0x22B59CL =>
-              tLang = new String(b, body, bodyEnd - body, "ISO-8859-1")
-            case _ => ()
-          }
-          off = bodyEnd
         }
-      }
-      walk(0, b.length, 0)
+        def leaf(id: Long, body: Int, end: Int): Unit = id match {
+          case 0x83L => tType = Ebml.uint(b, body, end).toInt
+          case 0x22B59CL => tLang = Ebml.latin1(b, body, end)
+          case _ => ()
+        }
+      }.walk()
       return found
     }
     null
-  } catch { case _: Throwable => null } // per-row isolation
+  } catch { case NonFatal(_) => null } // per-row isolation
 
   /** [[declaredTextLang]] as a Column — codegen'd like
     * [[subtitleTrackCountCol]].
@@ -1727,11 +1444,7 @@ object Multimodal {
     * discipline).
     */
   private[graft] def withMp4SubtitleTrack(mp4: Array[Byte]): Array[Byte] = {
-    def box(id: String, payload: Array[Byte]): Array[Byte] = {
-      val out = java.nio.ByteBuffer.allocate(8 + payload.length)
-      out.putInt(8 + payload.length).put(id.getBytes("ISO-8859-1")).put(payload)
-      out.array()
-    }
+    import Bmff.box
     val hdlr = new Array[Byte](8) ++ "sbtl".getBytes("ISO-8859-1") ++
       new Array[Byte](12)
     val trak = box("trak", box("mdia", box("hdlr", hdlr)))
@@ -1777,22 +1490,7 @@ object Multimodal {
       "muxed cues ride the first subtitle track")
     require(subCues2.isEmpty || subtitleTracks > 1,
       "second-track cues need a second subtitle track")
-    def vintSize(n: Long): Array[Byte] = { // 4-byte size VINT
-      require(n >= 0 && n < (1L << 28), s"fixture size too large: $n")
-      Array((0x10 | (n >> 24)).toByte, ((n >> 16) & 0xff).toByte,
-        ((n >> 8) & 0xff).toByte, (n & 0xff).toByte)
-    }
-    def idBytes(id: Long): Array[Byte] = {
-      val n = (64 - java.lang.Long.numberOfLeadingZeros(id) + 7) / 8
-      Array.tabulate(n)(i => ((id >> (8 * (n - 1 - i))) & 0xff).toByte)
-    }
-    def el(id: Long, payload: Array[Byte]): Array[Byte] =
-      idBytes(id) ++ vintSize(payload.length.toLong) ++ payload
-    def uintEl(id: Long, v: Long): Array[Byte] = {
-      var n = 1
-      while (n < 8 && (v >>> (8 * n)) != 0) n += 1
-      el(id, Array.tabulate(n)(i => ((v >> (8 * (n - 1 - i))) & 0xff).toByte))
-    }
+    import Ebml.{el, uintEl}
     def strEl(id: Long, s: String): Array[Byte] =
       el(id, s.getBytes("ISO-8859-1"))
     val ebml = el(0x1A45DFA3L, strEl(0x4282L, docType))
@@ -2031,43 +1729,21 @@ object Multimodal {
     */
   private[graft] def avifInfo(b: Array[Byte]): Option[(Int, Int, Int)] = {
     if (heifBrand(b).isEmpty) return None
-    @inline def u32(o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    @inline def u64(o: Int): Long = (u32(o) << 32) | u32(o + 4)
-    @inline def fourcc(o: Int): String = new String(b, o, 4, "ISO-8859-1")
+    import Bmff.u32
     var w = -1L
     var h = -1L
     var channels = 3
-    // depth-capped: a crafted file nesting thousands of 8-byte
-    // container boxes must exhaust the CAP, not the task stack
-    def walk(start: Long, end: Long, depth: Int = 0): Unit = {
-      if (depth > 16) return
-      var off = start
-      while (off + 8 <= end) {
-        val size0 = u32(off.toInt)
-        val id = fourcc(off.toInt + 4)
-        var body = off + 8
-        // size==1: ISO-BMFF 64-bit largesize at off+8 (mp4VideoTrack's rule)
-        val boxEnd =
-          if (size0 == 1 && off + 16 <= end) { body = off + 16; off + u64(off.toInt + 8) }
-          else if (size0 == 0) end
-          else off + size0
-        if (boxEnd < body || boxEnd > end) return
-        id match {
-          case "meta" => walk(body + 4, boxEnd, depth + 1) // FULL box: skip ver/flags
-          case "iprp" | "ipco" => walk(body, boxEnd, depth + 1)
-          case "ispe" if body + 12 <= boxEnd =>
-            w = u32(body.toInt + 4) // after the fullbox ver/flags
-            h = u32(body.toInt + 8)
-          case "pixi" if body + 5 <= boxEnd =>
-            channels = b(body.toInt + 4) & 0xff
-          case _ => ()
-        }
-        off = boxEnd
+    new Bmff.Walker(b) {
+      def visit(id: String, body: Int, end: Int): Unit = id match {
+        case "meta" => descend(id, body + 4, end) // FULL box: skip ver/flags
+        case "iprp" | "ipco" => descend(id, body, end)
+        case "ispe" if body + 12 <= end =>
+          w = u32(b, body + 4) // after the fullbox ver/flags
+          h = u32(b, body + 8)
+        case "pixi" if body + 5 <= end => channels = b(body + 4) & 0xff
+        case _ => ()
       }
-    }
-    walk(0L, b.length.toLong)
+    }.walk()
     if (w <= 0 || h <= 0 || w > Int.MaxValue || h > Int.MaxValue) None
     else Some((w.toInt, h.toInt, channels))
   }
@@ -2272,12 +1948,7 @@ object Multimodal {
     }
     if (!container) body
     else {
-      def box(id: String, payload: Array[Byte]): Array[Byte] = {
-        val out = java.nio.ByteBuffer.allocate(8 + payload.length)
-        out.putInt(8 + payload.length).put(id.getBytes("ISO-8859-1"))
-          .put(payload)
-        out.array()
-      }
+      import Bmff.box
       val exif =
         if (!gps) Array.emptyByteArray
         else {
@@ -2320,15 +1991,10 @@ object Multimodal {
     * appear (the common `ftyp mif1 [.., avif]` layout).
     */
   private[graft] def heifBrand(b: Array[Byte]): Option[String] = {
-    if (b == null || b.length < 16 ||
-      !(b(4) == 'f' && b(5) == 't' && b(6) == 'y' && b(7) == 'p')) return None
-    @inline def u32(o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    @inline def fourcc(o: Int): String = new String(b, o, 4, "ISO-8859-1")
-    val ftypEnd = math.min(u32(0), b.length.toLong).toInt
-    val brands = fourcc(8) +:
-      (16 until (ftypEnd - 3) by 4).map(fourcc)
+    if (!Bmff.isBmff(b)) return None
+    val ftypEnd = math.min(Bmff.u32(b, 0), b.length.toLong).toInt
+    val brands = Bmff.fourcc(b, 8) +:
+      (16 until (ftypEnd - 3) by 4).map(Bmff.fourcc(b, _))
     val hits = brands.flatMap(HeifImageBrands.get)
     // a specific codec family beats the generic heif base
     hits.find(_ != "heif").orElse(hits.headOption)
@@ -2361,55 +2027,34 @@ object Multimodal {
   private[graft] def avifExifRegion(b: Array[Byte]): Long = {
     var exifId = -1L
     try {
-    if (b == null || b.length < 16 ||
-      !(b(4) == 'f' && b(5) == 't' && b(6) == 'y' && b(7) == 'p')) return -1L
-    @inline def u16(o: Int): Int = ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-    @inline def u32(o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    @inline def u64(o: Int): Long = (u32(o) << 32) | u32(o + 4)
+    if (!Bmff.isBmff(b)) return -1L
+    @inline def u16(o: Int): Int = Bmff.u16(b, o)
+    @inline def u32(o: Int): Long = Bmff.u32(b, o)
     var ilocBody = -1
     var ilocEnd = -1
     var idatBody = -1
     var idatEnd = -1
-    def walk(start: Long, end: Long, depth: Int): Unit = {
-      if (depth > 16) return
-      var off = start
-      while (off + 8 <= end) {
-        val size0 = u32(off.toInt)
-        val id = new String(b, off.toInt + 4, 4, "ISO-8859-1")
-        var body = off + 8
-        val boxEnd =
-          if (size0 == 1 && off + 16 <= end) { body = off + 16; off + u64(off.toInt + 8) }
-          else if (size0 == 0) end
-          else off + size0
-        if (boxEnd < body || boxEnd > end) return
-        val p = body.toInt
-        id match {
-          case "meta" => walk(body + 4, boxEnd, depth + 1) // FULL box
-          case "iinf" if p + 4 <= boxEnd =>
-            // fullbox; entry count u16 (v0) / u32 (v1+), then infe children
-            val ver = b(p) & 0xff
-            val kids = if (ver == 0) p + 6 else p + 8
-            if (kids <= boxEnd) walk(kids, boxEnd, depth + 1)
-          case "infe" if p + 4 <= boxEnd =>
-            val ver = b(p) & 0xff
-            // v2: u16 id at +4, u16 protection, 4cc type at +8;
-            // v3+: u32 id at +4, u16 protection, 4cc type at +10
-            if (ver == 2 && p + 12 <= boxEnd &&
-              new String(b, p + 8, 4, "ISO-8859-1") == "Exif")
-              exifId = u16(p + 4).toLong
-            else if (ver >= 3 && p + 14 <= boxEnd &&
-              new String(b, p + 10, 4, "ISO-8859-1") == "Exif")
-              exifId = u32(p + 4)
-          case "iloc" => ilocBody = p; ilocEnd = boxEnd.toInt
-          case "idat" => idatBody = p; idatEnd = boxEnd.toInt
-          case _ => ()
-        }
-        off = boxEnd
+    new Bmff.Walker(b) {
+      def visit(id: String, p: Int, end: Int): Unit = id match {
+        case "meta" => descend(id, p + 4, end) // FULL box
+        case "iinf" if p + 4 <= end =>
+          // fullbox; entry count u16 (v0) / u32 (v1+), then infe children
+          val ver = b(p) & 0xff
+          val kids = if (ver == 0) p + 6 else p + 8
+          if (kids <= end) descend(id, kids, end)
+        case "infe" if p + 4 <= end =>
+          val ver = b(p) & 0xff
+          // v2: u16 id at +4, u16 protection, 4cc type at +8;
+          // v3+: u32 id at +4, u16 protection, 4cc type at +10
+          if (ver == 2 && p + 12 <= end && Bmff.fourcc(b, p + 8) == "Exif")
+            exifId = u16(p + 4).toLong
+          else if (ver >= 3 && p + 14 <= end && Bmff.fourcc(b, p + 10) == "Exif")
+            exifId = u32(p + 4)
+        case "iloc" => ilocBody = p; ilocEnd = end
+        case "idat" => idatBody = p; idatEnd = end
+        case _ => ()
       }
-    }
-    walk(0L, b.length.toLong, 0)
+    }.walk()
     if (exifId < 0) return -1L
     if (ilocBody < 0) return -2L // declared item with no location table
     // parse iloc for the Exif item's first extent; from here on every
@@ -2477,7 +2122,7 @@ object Multimodal {
       i += 1
     }
     -2L // declared item never appeared in the location table
-    } catch { case _: Throwable => if (exifId >= 0) -2L else -1L }
+    } catch { case NonFatal(_) => if (exifId >= 0) -2L else -1L }
   }
 
   /** Minimal AVIF header fixture ([[syntheticWebp]] discipline):
@@ -2495,11 +2140,7 @@ object Multimodal {
       channels: Int = 3, gps: Boolean = false,
       brand: String = "avif", idatExif: Boolean = false): Array[Byte] = {
     require(brand.length == 4, s"brand must be a FourCC: $brand")
-    def box(id: String, payload: Array[Byte]): Array[Byte] = {
-      val out = java.nio.ByteBuffer.allocate(8 + payload.length)
-      out.putInt(8 + payload.length).put(id.getBytes("ISO-8859-1")).put(payload)
-      out.array()
-    }
+    import Bmff.box
     val ftyp = box("ftyp", brand.getBytes("ISO-8859-1") ++
       new Array[Byte](4) ++ "mif1".getBytes("ISO-8859-1"))
     val ispe = box("ispe", java.nio.ByteBuffer.allocate(12)
@@ -2761,11 +2402,7 @@ object Multimodal {
   /** Minimal ISO-BMFF: ftyp + moov(mvhd v0 + trak(tkhd v0)). */
   private[graft] def syntheticMp4(w: Int, h: Int, durationMs: Long,
       timescale: Int = 1000): Array[Byte] = {
-    def box(id: String, payload: Array[Byte]): Array[Byte] = {
-      val out = java.nio.ByteBuffer.allocate(8 + payload.length)
-      out.putInt(8 + payload.length).put(id.getBytes).put(payload)
-      out.array()
-    }
+    import Bmff.box
     val mvhd = {
       val p = java.nio.ByteBuffer.allocate(100)
       p.putInt(0) // version 0 + flags
@@ -3067,37 +2704,17 @@ object Multimodal {
     * movie. Shared by the flag and the scrub.
     */
   private def videoGpsRegions(b: Array[Byte]): Seq[(Int, Int)] = try {
-    if (b == null || b.length < 16 ||
-      !(b(4) == 'f' && b(5) == 't' && b(6) == 'y' && b(7) == 'p') ||
-      isHeifMagic(b)) return null
-    @inline def u32(o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    @inline def u64(o: Int): Long = (u32(o) << 32) | u32(o + 4)
+    if (!Bmff.isBmff(b) || isHeifMagic(b)) return null
     val out = Seq.newBuilder[(Int, Int)]
-    def walk(start: Long, end: Long, depth: Int): Unit = {
-      if (depth > 16) return
-      var off = start
-      while (off + 8 <= end) {
-        val size0 = u32(off.toInt)
-        val id = new String(b, off.toInt + 4, 4, "ISO-8859-1")
-        var body = off + 8
-        val boxEnd =
-          if (size0 == 1 && off + 16 <= end) { body = off + 16; off + u64(off.toInt + 8) }
-          else if (size0 == 0) end
-          else off + size0
-        if (boxEnd < body || boxEnd > end) return
-        id match {
-          case "moov" | "udta" | "trak" => walk(body, boxEnd, depth + 1)
-          case "©xyz" | "loci" => out += ((body.toInt, boxEnd.toInt))
-          case _ => ()
-        }
-        off = boxEnd
+    new Bmff.Walker(b) {
+      def visit(id: String, body: Int, end: Int): Unit = id match {
+        case "moov" | "udta" | "trak" => descend(id, body, end)
+        case "©xyz" | "loci" => out += ((body, end))
+        case _ => ()
       }
-    }
-    walk(0L, b.length.toLong, 0)
+    }.walk()
     out.result()
-  } catch { case _: Throwable => null }
+  } catch { case NonFatal(_) => null }
 
   /** Surgical video-GPS removal — [[scrubGps]]'s movie twin: zero
     * the `©xyz`/`loci` payload bytes in place on a copy (box sizes
@@ -3177,11 +2794,7 @@ object Multimodal {
   private[graft] def mp4WithChpl(mp4: Array[Byte],
       chapters: Seq[(Long, String)]): Array[Byte] = {
     require(chapters.nonEmpty && chapters.size < 256, "u8 chapter count")
-    def box(id: String, payload: Array[Byte]): Array[Byte] = {
-      val out = java.nio.ByteBuffer.allocate(8 + payload.length)
-      out.putInt(8 + payload.length).put(id.getBytes("ISO-8859-1")).put(payload)
-      out.array()
-    }
+    import Bmff.box
     val body = new java.io.ByteArrayOutputStream()
     body.write(Array[Byte](1, 0, 0, 0), 0, 4) // fullbox version 1
     body.write(new Array[Byte](4), 0, 4) // reserved
@@ -3216,11 +2829,7 @@ object Multimodal {
     */
   private[graft] def mp4WithGps(mp4: Array[Byte],
       iso6709: String = "+37.7749-122.4194/"): Array[Byte] = {
-    def box(id: String, payload: Array[Byte]): Array[Byte] = {
-      val out = java.nio.ByteBuffer.allocate(8 + payload.length)
-      out.putInt(8 + payload.length).put(id.getBytes("ISO-8859-1")).put(payload)
-      out.array()
-    }
+    import Bmff.box
     val s = iso6709.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val xyz = box("©xyz", java.nio.ByteBuffer.allocate(4 + s.length)
       .putShort(s.length.toShort).putShort(0x15c7) // lang: und
@@ -3414,21 +3023,9 @@ object Multimodal {
     * IFD0 pointer entry. False when no GPS entry is found.
     */
   private def zeroGpsIfd(b: Array[Byte], tiff: Int, end: Int): Boolean = {
-    if (tiff + 8 > end) return false
-    val little =
-      if (b(tiff) == 'I' && b(tiff + 1) == 'I') true
-      else if (b(tiff) == 'M' && b(tiff + 1) == 'M') false
-      else return false
-    def u16(o: Int): Int =
-      if (o < tiff || o + 2 > end) -1
-      else if (little) (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-      else ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-    def u32(o: Int): Long =
-      if (o < tiff || o + 4 > end) -1L
-      else if (little) (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-      else ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
+    val t = TiffIfd.at(b, tiff, end)
+    if (t == null) return false
+    import t.{little, u16, u32}
     def putU16(o: Int, v: Int): Unit =
       if (little) { b(o) = (v & 0xff).toByte; b(o + 1) = ((v >> 8) & 0xff).toByte }
       else { b(o) = ((v >> 8) & 0xff).toByte; b(o + 1) = (v & 0xff).toByte }
@@ -3437,12 +3034,8 @@ object Multimodal {
       val u = math.min(until, end)
       if (f < u) java.util.Arrays.fill(b, f, u, 0.toByte)
     }
-    if (u16(tiff + 2) != 42) return false
-    val ifdOff = u32(tiff + 4)
-    if (ifdOff < 0) return false
-    val ifd = tiff + ifdOff.toInt
+    val ifd = t.ifd0
     val nEntries = u16(ifd)
-    if (nEntries < 0) return false
     var k = 0
     while (k < nEntries) {
       val e = ifd + 2 + 12 * k
@@ -3548,57 +3141,23 @@ object Multimodal {
   /** Scan IFD0 of the TIFF region for `tag` (any type/count). */
   private def tiffHasTag(b: Array[Byte], tiff: Int, end: Int,
       tag: Int): Boolean = {
-    if (tiff + 8 > end) return false
-    val little =
-      if (b(tiff) == 'I' && b(tiff + 1) == 'I') true
-      else if (b(tiff) == 'M' && b(tiff + 1) == 'M') false
-      else return false
-    def u16(o: Int): Int =
-      if (o < tiff || o + 2 > end) -1
-      else if (little) (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-      else ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-    def u32(o: Int): Long =
-      if (o < tiff || o + 4 > end) -1L
-      else if (little) (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-      else ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    if (u16(tiff + 2) != 42) return false
-    val ifdOff = u32(tiff + 4)
-    if (ifdOff < 0) return false
-    val ifd = tiff + ifdOff.toInt
-    val nEntries = u16(ifd)
-    if (nEntries < 0) return false
+    val t = TiffIfd.at(b, tiff, end)
+    if (t == null) return false
+    val nEntries = t.u16(t.ifd0)
     var k = 0
     while (k < nEntries) {
-      if (u16(ifd + 2 + 12 * k) == tag) return true
+      if (t.u16(t.ifd0 + 2 + 12 * k) == tag) return true
       k += 1
     }
     false
   }
 
   private def tiffOrientation(b: Array[Byte], tiff: Int, end: Int): Int = {
-    if (tiff + 8 > end) return 1
-    val little =
-      if (b(tiff) == 'I' && b(tiff + 1) == 'I') true
-      else if (b(tiff) == 'M' && b(tiff + 1) == 'M') false
-      else return 1
-    def u16(o: Int): Int =
-      if (o < tiff || o + 2 > end) -1
-      else if (little) (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-      else ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-    def u32(o: Int): Long =
-      if (o < tiff || o + 4 > end) -1L
-      else if (little) (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-      else ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    if (u16(tiff + 2) != 42) return 1
-    val ifdOff = u32(tiff + 4)
-    if (ifdOff < 0) return 1
-    val ifd = tiff + ifdOff.toInt
+    val t = TiffIfd.at(b, tiff, end)
+    if (t == null) return 1
+    import t.{u16, u32}
+    val ifd = t.ifd0
     val nEntries = u16(ifd)
-    if (nEntries < 0) return 1
     var k = 0
     while (k < nEntries) {
       val e = ifd + 2 + 12 * k
@@ -3635,50 +3194,8 @@ object Multimodal {
     */
   private def tiffAsciiTag(b: Array[Byte], tiff: Int, end: Int,
       tag: Int): String = {
-    if (tiff + 8 > end) return null
-    val little =
-      if (b(tiff) == 'I' && b(tiff + 1) == 'I') true
-      else if (b(tiff) == 'M' && b(tiff + 1) == 'M') false
-      else return null
-    def u16(o: Int): Int =
-      if (o < tiff || o + 2 > end) -1
-      else if (little) (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-      else ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-    def u32(o: Int): Long =
-      if (o < tiff || o + 4 > end) -1L
-      else if (little) (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-      else ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    if (u16(tiff + 2) != 42) return null
-    val ifdOff = u32(tiff + 4)
-    if (ifdOff < 0) return null
-    val ifd = tiff + ifdOff.toInt
-    val nEntries = u16(ifd)
-    if (nEntries < 0) return null
-    var k = 0
-    while (k < nEntries) {
-      val e = ifd + 2 + 12 * k
-      if (u16(e) == tag && u16(e + 2) == 2) {
-        val count = u32(e + 4)
-        if (count <= 0 || count > end - tiff) return null
-        val from =
-          if (count <= 4) e + 8
-          else {
-            val o = u32(e + 8)
-            if (o < 0) return null
-            tiff + o.toInt
-          }
-        if (from < tiff || count > end - from) return null
-        val raw = new String(b, from, count.toInt,
-          java.nio.charset.StandardCharsets.UTF_8)
-        val nul = raw.indexOf(0.toChar)
-        val t = if (nul >= 0) raw.substring(0, nul) else raw
-        return if (t.isEmpty) null else t
-      }
-      k += 1
-    }
-    null
+    val t = TiffIfd.at(b, tiff, end)
+    if (t == null) null else t.ascii(t.ifd0, tag)
   }
 
   /** Camera provenance declared in the EXIF block of ANY carrier
@@ -3694,57 +3211,12 @@ object Multimodal {
     if (b == null || b.length < 12) return None
     val r = exifTiffRegion(b)
     if (r < 0) return None
-    val tiff = (r >>> 32).toInt
-    val end = (r & 0xffffffffL).toInt
-    if (tiff + 8 > end) return None
-    val little =
-      if (b(tiff) == 'I' && b(tiff + 1) == 'I') true
-      else if (b(tiff) == 'M' && b(tiff + 1) == 'M') false
-      else return None
-    def u16(o: Int): Int =
-      if (o < tiff || o + 2 > end) -1
-      else if (little) (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-      else ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-    def u32(o: Int): Long =
-      if (o < tiff || o + 4 > end) -1L
-      else if (little) (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-      else ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    if (u16(tiff + 2) != 42) return None
-    val ifd0Off = u32(tiff + 4)
-    if (ifd0Off < 0) return None
-    val ifd0 = tiff + ifd0Off.toInt
-    def asciiIn(ifd: Int, tag: Int): String = {
-      val n = u16(ifd)
-      if (n < 0) return null
-      var k = 0
-      while (k < n) {
-        val e = ifd + 2 + 12 * k
-        if (u16(e) == tag && u16(e + 2) == 2) {
-          val count = u32(e + 4)
-          if (count <= 0 || count > end - tiff) return null
-          val from =
-            if (count <= 4) e + 8
-            else {
-              val o = u32(e + 8)
-              if (o < 0) return null
-              tiff + o.toInt
-            }
-          if (from < tiff || count > end - from) return null
-          val raw = new String(b, from, count.toInt,
-            java.nio.charset.StandardCharsets.UTF_8)
-          val nul = raw.indexOf(0.toChar)
-          val t = if (nul >= 0) raw.substring(0, nul) else raw
-          return if (t.isEmpty) null else t
-        }
-        k += 1
-      }
-      null
-    }
+    val t = TiffIfd.at(b, (r >>> 32).toInt, (r & 0xffffffffL).toInt)
+    if (t == null) return None
+    import t.{ascii => asciiIn, end, tiff, u16, u32}
+    val ifd0 = t.ifd0
     def longIn(ifd: Int, tag: Int): Long = {
       val n = u16(ifd)
-      if (n < 0) return -1L
       var k = 0
       while (k < n) {
         val e = ifd + 2 + 12 * k
@@ -3765,7 +3237,7 @@ object Multimodal {
     val captured = if (dto != null) dto else asciiIn(ifd0, 0x0132)
     if (make == null && model == null && captured == null) None
     else Some((make, model, captured))
-  } catch { case _: Throwable => None } // per-row isolation
+  } catch { case NonFatal(_) => None } // per-row isolation
 
   /** [[ImageTextSchema]]'s provenance sibling. */
   val ImageProvenanceSchema: StructType = StructType(Seq(
@@ -3853,27 +3325,10 @@ object Multimodal {
     if (b == null || b.length < 12) return null
     val r = exifTiffRegion(b)
     if (r < 0) return null
-    val tiff = (r >>> 32).toInt
-    val end = (r & 0xffffffffL).toInt
-    if (tiff + 8 > end) return null
-    val little =
-      if (b(tiff) == 'I' && b(tiff + 1) == 'I') true
-      else if (b(tiff) == 'M' && b(tiff + 1) == 'M') false
-      else return null
-    def u16(o: Int): Int =
-      if (o < tiff || o + 2 > end) -1
-      else if (little) (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-      else ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-    def u32(o: Int): Long =
-      if (o < tiff || o + 4 > end) -1L
-      else if (little) (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-      else ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    if (u16(tiff + 2) != 42) return null
-    val ifd0Off = u32(tiff + 4)
-    if (ifd0Off < 0) return null
-    val ifd0 = tiff + ifd0Off.toInt
+    val t = TiffIfd.at(b, (r >>> 32).toInt, (r & 0xffffffffL).toInt)
+    if (t == null) return null
+    import t.{end, tiff, u16, u32}
+    val ifd0 = t.ifd0
     val n0 = u16(ifd0)
     if (n0 < 0 || n0 > 4096) return null
     val nextOff = u32(ifd0 + 2 + 12 * n0)
@@ -3901,7 +3356,7 @@ object Multimodal {
     val s = tiff + thumbOff
     if (s + thumbLen > end) return null
     java.util.Arrays.copyOfRange(b, s.toInt, (s + thumbLen).toInt)
-  } catch { case _: Throwable => null } // per-row isolation
+  } catch { case NonFatal(_) => null } // per-row isolation
 
   /** Append a `thumb` binary column ([[exifThumbnail]] per row) —
     * [[embeddedArt]]'s photo-forensics sibling: map-only, null for
@@ -4714,9 +4169,7 @@ object Multimodal {
     */
   private[graft] def muxedTextTracks(
       bytes: Array[Byte]): Option[Seq[(String, String, Seq[SubCue])]] =
-    if (bytes != null && bytes.length >= 8 && bytes(0) == 0x1A.toByte &&
-      bytes(1) == 0x45.toByte && bytes(2) == 0xDF.toByte &&
-      bytes(3) == 0xA3.toByte)
+    if (Ebml.isEbml(bytes))
       // ONE EBML walk: every track's cues ride the declared
       // language of the SAME track (no cross-stamping). EVERY
       // declared subtitle track rides through — PGS tracks with
@@ -4727,8 +4180,7 @@ object Multimodal {
           (if (codecLabel == null) f else codecLabel, lang, cues)
         }
       }.filter(_.nonEmpty)
-    else if (bytes != null && bytes.length >= 16 && bytes(4) == 'f' &&
-      bytes(5) == 't' && bytes(6) == 'y' && bytes(7) == 'p') {
+    else if (Bmff.isBmff(bytes)) {
       val (tracks, chapRefs) = mp4TextTracks(bytes)
       // every non-chapter text trak registers — a declaration-only
       // track (empty sample table) reports zero cues rather than
@@ -5007,15 +4459,14 @@ object Multimodal {
     */
   private[graft] def containerDurationMs(b: Array[Byte]): java.lang.Long = try {
     if (b == null || b.length < 16) return null
-    if (b(4) == 'f' && b(5) == 't' && b(6) == 'y' && b(7) == 'p') {
+    if (Bmff.isBmff(b)) {
       val row = decodeMp4(b)
       // decodeMp4's meta Row is schemaless: positional access only
       // (the q183 discipline) — durationMs is field 5
       return if (row.isNullAt(5)) null
       else java.lang.Long.valueOf(row.getLong(5))
     }
-    if (b(0) == 0x1A.toByte && b(1) == 0x45.toByte &&
-      b(2) == 0xDF.toByte && b(3) == 0xA3.toByte)
+    if (Ebml.isEbml(b))
       return webmInfo(b).flatMap(i => Option(i.durationMs)).orNull
     null
   } catch { case _: Throwable => null } // per-row isolation
@@ -6929,13 +6380,8 @@ object Multimodal {
     * frames go through [[mp4VideoTrack]]).
     */
   private[graft] def m4aAudioInfo(b: Array[Byte]): Option[(Int, Int, Long, String)] = {
-    if (b == null || b.length < 16 ||
-      !(b(4) == 'f' && b(5) == 't' && b(6) == 'y' && b(7) == 'p')) return None
-    @inline def u32(o: Int): Long =
-      ((b(o) & 0xFFL) << 24) | ((b(o + 1) & 0xFFL) << 16) |
-        ((b(o + 2) & 0xFFL) << 8) | (b(o + 3) & 0xFFL)
-    @inline def u64(o: Int): Long = (u32(o) << 32) | u32(o + 4)
-    @inline def u16(o: Int): Int = ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
+    if (!Bmff.isBmff(b)) return None
+    import Bmff.{fourcc, u16, u32, u64}
     var timescale = 0
     var duration = 0L
     var isAudioTrack = false
@@ -6953,51 +6399,35 @@ object Multimodal {
       timescale = 0; duration = 0L; isAudioTrack = false
       codec = null; channels = 0; rate = 0
     }
-    // depth-capped: a crafted file nesting thousands of 8-byte
-    // container boxes must exhaust the CAP, not the task stack
-    def walk(start: Long, end: Long, depth: Int = 0): Unit = {
-      if (depth > 16) return
-      var off = start
-      while (!sawVideoTrack && off + 8 <= end) {
-        val size0 = u32(off.toInt)
-        val id = new String(b, off.toInt + 4, 4, "ISO-8859-1")
-        var body = off + 8
-        val boxEnd =
-          if (size0 == 1 && off + 16 <= end) { body = off + 16; off + u64(off.toInt + 8) }
-          else if (size0 == 0) end
-          else off + size0
-        if (boxEnd < body || boxEnd > end) return
-        val p = body.toInt
-        id match {
-          case "moov" | "mdia" | "minf" | "stbl" => walk(body, boxEnd, depth + 1)
-          case "trak" => walk(body, boxEnd, depth + 1); finishTrak()
-          case "mdhd" if p + 4 <= boxEnd =>
-            if (b(p) == 1 && p + 32 <= boxEnd) {
-              timescale = u32(p + 20).toInt; duration = u64(p + 24)
-            } else if (p + 24 <= boxEnd) {
-              timescale = u32(p + 12).toInt; duration = u32(p + 16)
-            }
-            if (duration == 0xFFFFFFFFL || duration == -1L) duration = 0L
-          case "hdlr" if p + 12 <= boxEnd =>
-            val handler = new String(b, p + 8, 4, "ISO-8859-1")
-            isAudioTrack = handler == "soun"
-            if (handler == "vide") sawVideoTrack = true
-          case "stsd" if p + 16 <= boxEnd =>
-            // first sample entry: fourcc at +12; the audio sample
-            // entry's channelcount sits 24 bytes and its 16.16 sample
-            // rate 32 bytes into the entry (ISO/IEC 14496-12 §12.2.3)
-            val entry = p + 8
-            codec = new String(b, entry + 4, 4, "ISO-8859-1")
-            if (entry + 36 <= boxEnd) {
-              channels = u16(entry + 24)
-              rate = (u32(entry + 32) >> 16).toInt
-            }
-          case _ => ()
-        }
-        off = boxEnd
+    new Bmff.Walker(b) {
+      override def done: Boolean = sawVideoTrack
+      def visit(id: String, p: Int, end: Int): Unit = id match {
+        case "moov" | "mdia" | "minf" | "stbl" => descend(id, p, end)
+        case "trak" => descend(id, p, end); finishTrak()
+        case "mdhd" if p + 4 <= end =>
+          if (b(p) == 1 && p + 32 <= end) {
+            timescale = u32(b, p + 20).toInt; duration = u64(b, p + 24)
+          } else if (p + 24 <= end) {
+            timescale = u32(b, p + 12).toInt; duration = u32(b, p + 16)
+          }
+          if (duration == 0xFFFFFFFFL || duration == -1L) duration = 0L
+        case "hdlr" if p + 12 <= end =>
+          val handler = fourcc(b, p + 8)
+          isAudioTrack = handler == "soun"
+          if (handler == "vide") sawVideoTrack = true
+        case "stsd" if p + 16 <= end =>
+          // first sample entry: fourcc at +12; the audio sample
+          // entry's channelcount sits 24 bytes and its 16.16 sample
+          // rate 32 bytes into the entry (ISO/IEC 14496-12 §12.2.3)
+          val entry = p + 8
+          codec = fourcc(b, entry + 4)
+          if (entry + 36 <= end) {
+            channels = u16(b, entry + 24)
+            rate = (u32(b, entry + 32) >> 16).toInt
+          }
+        case _ => ()
       }
-    }
-    walk(0L, b.length.toLong)
+    }.walk()
     if (sawVideoTrack) None else found
   }
 
@@ -7007,11 +6437,7 @@ object Multimodal {
     */
   private[graft] def syntheticM4a(channels: Int, sampleRate: Int,
       nSamples: Long, codec: String = "mp4a"): Array[Byte] = {
-    def box(id: String, payload: Array[Byte]): Array[Byte] = {
-      val out = java.nio.ByteBuffer.allocate(8 + payload.length)
-      out.putInt(8 + payload.length).put(id.getBytes("ISO-8859-1")).put(payload)
-      out.array()
-    }
+    import Bmff.box
     val mdhd = {
       val p = java.nio.ByteBuffer.allocate(24)
       p.putInt(0).putInt(0).putInt(0) // v0, times
@@ -7502,87 +6928,36 @@ object Multimodal {
     * chapter atom.
     */
   private[graft] def webmChapters(b: Array[Byte]): Option[(String, Seq[SubCue])] = try {
-    if (b == null || b.length < 8 ||
-      !(b(0) == 0x1A.toByte && b(1) == 0x45.toByte &&
-        b(2) == 0xDF.toByte && b(3) == 0xA3.toByte)) return None
-    @inline def vintLen(o: Int): Int = {
-      if (o >= b.length) return -1
-      val b0 = b(o) & 0xff
-      if (b0 == 0) -1 else Integer.numberOfLeadingZeros(b0) - 23
-    }
-    def readId(o: Int): Long = {
-      val n = vintLen(o)
-      if (n < 1 || n > 4 || o + n > b.length) return -1L
-      var v = 0L
-      var i = 0
-      while (i < n) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-      v
-    }
-    def readSize(o: Int): (Long, Int) = {
-      val n = vintLen(o)
-      if (n < 1 || n > 8 || o + n > b.length) return (-2L, 0)
-      var v = (b(o) & 0xff & (0xff >>> n)).toLong
-      var i = 1
-      while (i < n) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-      (if (v == (1L << (7 * n)) - 1) -1L else v, n)
-    }
-    @inline def uintOf(from: Int, until: Int): Long = {
-      var v = 0L
-      var i = from
-      while (i < until) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
-      v
-    }
+    if (!Ebml.isEbml(b)) return None
     val raw = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
     var docType: String = null
     var aStart = -1L
     var aEnd = -1L
     var aTitle: String = null
-    def walk(start: Int, end: Int, depth: Int): Unit = {
-      if (depth > 16 || raw.size >= 10000) return
-      var off = start
-      while (off < end && raw.size < 10000) {
-        val id = readId(off)
-        if (id < 0) return
-        val idLen = vintLen(off)
-        val (size, szLen) = readSize(off + idLen)
-        if (szLen == 0) return
-        val body = off + idLen + szLen
-        val isContainer = id match {
-          case 0x1A45DFA3L | 0x18538067L | 0x1043A770L | 0x45B9L |
-               0xB6L | 0x80L => true
-          case _ => false
-        }
-        val bodyEnd =
-          if (size < 0) { if (isContainer) end else return }
-          else if (size > end - body) { if (isContainer) end else return }
-          else body + size.toInt
-        id match {
-          case _ if isContainer =>
-            if (id == 0xB6L) {
-              // NESTED ChapterAtoms each commit their own scratch:
-              // save the parent's around the recursion
-              val (ps, pe, pt) = (aStart, aEnd, aTitle)
-              aStart = -1L; aEnd = -1L; aTitle = null
-              walk(body, bodyEnd, depth + 1)
-              if (aStart >= 0)
-                raw += ((aStart / 1000000L,
-                  if (aEnd >= aStart) aEnd / 1000000L else -1L,
-                  if (aTitle == null) "" else aTitle))
-              aStart = ps; aEnd = pe; aTitle = pt
-            } else walk(body, bodyEnd, depth + 1)
-          case 0x4282L => // DocType
-            docType = new String(b, body, bodyEnd - body, "ISO-8859-1")
-          case 0x91L => aStart = uintOf(body, bodyEnd) // ns
-          case 0x92L => aEnd = uintOf(body, bodyEnd)
-          case 0x85L => // ChapString
-            aTitle = new String(b, body, bodyEnd - body,
-              java.nio.charset.StandardCharsets.UTF_8)
-          case _ => ()
-        }
-        off = bodyEnd
+    new Ebml.Walker(b, 0x1A45DFA3L, 0x18538067L, 0x1043A770L, 0x45B9L,
+        0xB6L, 0x80L) {
+      override def done: Boolean = raw.size >= 10000
+      override def container(id: Long, body: Int, end: Int): Unit =
+        if (id == 0xB6L) {
+          // NESTED ChapterAtoms each commit their own scratch: save
+          // the parent's around the recursion
+          val (ps, pe, pt) = (aStart, aEnd, aTitle)
+          aStart = -1L; aEnd = -1L; aTitle = null
+          descend(id, body, end)
+          if (aStart >= 0)
+            raw += ((aStart / 1000000L,
+              if (aEnd >= aStart) aEnd / 1000000L else -1L,
+              if (aTitle == null) "" else aTitle))
+          aStart = ps; aEnd = pe; aTitle = pt
+        } else descend(id, body, end)
+      def leaf(id: Long, body: Int, end: Int): Unit = id match {
+        case 0x4282L => docType = Ebml.latin1(b, body, end) // DocType
+        case 0x91L => aStart = Ebml.uint(b, body, end) // ns
+        case 0x92L => aEnd = Ebml.uint(b, body, end)
+        case 0x85L => aTitle = Ebml.utf8(b, body, end) // ChapString
+        case _ => ()
       }
-    }
-    walk(0, b.length, 0)
+    }.walk()
     if (raw.isEmpty) None
     else {
       val sorted = raw.sortBy(_._1).toSeq
@@ -7593,7 +6968,7 @@ object Multimodal {
           SubCue(k + 1, st, end, t)
         }))
     }
-  } catch { case _: Throwable => None } // per-row isolation
+  } catch { case NonFatal(_) => None } // per-row isolation
 
   /** MP4/M4A/M4B chapters from the Nero `chpl` box under
     * `moov/udta` (the audiobook convention): fullbox + u32 reserved +
@@ -7602,35 +6977,17 @@ object Multimodal {
     * None for non-BMFF bytes or no chpl box.
     */
   private[graft] def mp4Chapters(b: Array[Byte]): Option[Seq[SubCue]] = try {
-    if (b == null || b.length < 16 ||
-      !(b(4) == 'f' && b(5) == 't' && b(6) == 'y' && b(7) == 'p')) return None
-    @inline def u32(o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    @inline def u64(o: Int): Long = (u32(o) << 32) | u32(o + 4)
+    if (!Bmff.isBmff(b)) return None
     var chplAt = -1
     var chplEnd = -1
-    def walk(start: Long, end: Long, depth: Int): Unit = {
-      if (depth > 16) return
-      var off = start
-      while (chplAt < 0 && off + 8 <= end) {
-        val size0 = u32(off.toInt)
-        val id = new String(b, off.toInt + 4, 4, "ISO-8859-1")
-        var body = off + 8
-        val boxEnd =
-          if (size0 == 1 && off + 16 <= end) { body = off + 16; off + u64(off.toInt + 8) }
-          else if (size0 == 0) end
-          else off + size0
-        if (boxEnd < body || boxEnd > end) return
-        id match {
-          case "moov" | "udta" => walk(body, boxEnd, depth + 1)
-          case "chpl" => chplAt = body.toInt; chplEnd = boxEnd.toInt
-          case _ => ()
-        }
-        off = boxEnd
+    new Bmff.Walker(b) {
+      override def done: Boolean = chplAt >= 0
+      def visit(id: String, body: Int, end: Int): Unit = id match {
+        case "moov" | "udta" => descend(id, body, end)
+        case "chpl" => chplAt = body; chplEnd = end
+        case _ => ()
       }
-    }
-    walk(0L, b.length.toLong, 0)
+    }.walk()
     if (chplAt < 0 || chplEnd - chplAt < 9) return None
     var p = chplAt + 8 // fullbox version/flags + u32 reserved
     val count = b(p) & 0xff
@@ -7638,7 +6995,7 @@ object Multimodal {
     val raw = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
     var i = 0
     while (i < count && p + 9 <= chplEnd) {
-      val startMs = u64(p) / 10000L // 100 ns units
+      val startMs = Bmff.u64(b, p) / 10000L // 100 ns units
       val len = b(p + 8) & 0xff
       p += 9
       if (p + len > chplEnd) return None
@@ -7655,7 +7012,7 @@ object Multimodal {
         SubCue(k + 1, st, end, t)
       })
     }
-  } catch { case _: Throwable => None } // per-row isolation
+  } catch { case NonFatal(_) => None } // per-row isolation
 
   /** Explode media chapters into rows:
     * (id, chap_format, chap_idx, start_ms, end_ms, title) —
@@ -7702,11 +7059,9 @@ object Multimodal {
     if (bytes == null || bytes.length < 10) None
     else if (bytes(0) == 'I' && bytes(1) == 'D' && bytes(2) == '3')
       id3Chapters(bytes).map(("id3", _))
-    else if (bytes(0) == 0x1A.toByte && bytes(1) == 0x45.toByte &&
-      bytes(2) == 0xDF.toByte && bytes(3) == 0xA3.toByte)
+    else if (Ebml.isEbml(bytes))
       webmChapters(bytes) // one pass: the walk carries its DocType
-    else if (bytes.length >= 16 && bytes(4) == 'f' && bytes(5) == 't' &&
-      bytes(6) == 'y' && bytes(7) == 'p')
+    else if (Bmff.isBmff(bytes))
       mp4Chapters(bytes).map(("chpl", _))
         // the QuickTime convention: a text track another trak
         // references via tref/chap IS the chapter list
@@ -7742,12 +7097,8 @@ object Multimodal {
     * synthetics and movies report no tags.
     */
   private def m4aIlst(b: Array[Byte]): Option[IlstFacts] = {
-    if (b == null || b.length < 16 ||
-      !(b(4) == 'f' && b(5) == 't' && b(6) == 'y' && b(7) == 'p')) return None
-    @inline def u32(o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    @inline def u64(o: Int): Long = (u32(o) << 32) | u32(o + 4)
+    if (!Bmff.isBmff(b)) return None
+    @inline def u32(o: Int): Long = Bmff.u32(b, o)
     var title: String = null
     var artist: String = null
     var album: String = null
@@ -7796,39 +7147,22 @@ object Multimodal {
         off += size
       }
     }
-    def walk(start: Long, end: Long, inIlst: Boolean,
-        depth: Int = 0): Unit = {
-      if (depth > 16) return // crafted deep nesting: give up, not the stack
-      var off = start
-      while (off + 8 <= end) {
-        val size0 = u32(off.toInt)
-        val id = new String(b, off.toInt + 4, 4, "ISO-8859-1")
-        var body = off + 8
-        // size==1: ISO-BMFF 64-bit largesize at off+8 (mp4VideoTrack's rule)
-        val boxEnd =
-          if (size0 == 1 && off + 16 <= end) { body = off + 16; off + u64(off.toInt + 8) }
-          else if (size0 == 0) end
-          else off + size0
-        if (boxEnd < body || boxEnd > end) return
-        if (inIlst) {
-          id match {
-            case "©nam" => title = dataText(body, boxEnd)
-            case "©ART" => artist = dataText(body, boxEnd)
-            case "©alb" => album = dataText(body, boxEnd)
-            case "©lyr" => lyrics = dataText(body, boxEnd)
-            case "covr" if art == null => dataArt(body, boxEnd)
-            case _ => ()
-          }
+    new Bmff.Walker(b) {
+      def visit(id: String, body: Int, end: Int): Unit =
+        if (parent == "ilst") id match {
+          case "©nam" => title = dataText(body, end)
+          case "©ART" => artist = dataText(body, end)
+          case "©alb" => album = dataText(body, end)
+          case "©lyr" => lyrics = dataText(body, end)
+          case "covr" if art == null => dataArt(body, end)
+          case _ => ()
         } else id match {
-          case "moov" | "udta" => walk(body, boxEnd, inIlst = false, depth + 1)
-          case "meta" => walk(body + 4, boxEnd, inIlst = false, depth + 1) // FULL box
-          case "ilst" => sawIlst = true; walk(body, boxEnd, inIlst = true, depth + 1)
+          case "moov" | "udta" => descend(id, body, end)
+          case "meta" => descend(id, body + 4, end) // FULL box
+          case "ilst" => sawIlst = true; descend(id, body, end)
           case _ => ()
         }
-        off = boxEnd
-      }
-    }
-    walk(0L, b.length.toLong, inIlst = false)
+    }.walk()
     if (!sawIlst) None
     else Some(IlstFacts(title, artist, album, artMime, art, lyrics))
   }
@@ -7925,30 +7259,7 @@ object Multimodal {
     * non-EBML bytes or a file declaring no Tags element.
     */
   private[graft] def webmTags(b: Array[Byte]): Option[(String, String, String, String)] = try {
-    if (b == null || b.length < 8 ||
-      !(b(0) == 0x1A.toByte && b(1) == 0x45.toByte &&
-        b(2) == 0xDF.toByte && b(3) == 0xA3.toByte)) return None
-    @inline def vintLen(o: Int): Int = {
-      if (o >= b.length) return -1
-      val b0 = b(o) & 0xff
-      if (b0 == 0) -1 else Integer.numberOfLeadingZeros(b0) - 23
-    }
-    def readId(o: Int): Long = {
-      val n = vintLen(o)
-      if (n < 1 || n > 4 || o + n > b.length) return -1L
-      var v = 0L
-      var i = 0
-      while (i < n) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-      v
-    }
-    def readSize(o: Int): (Long, Int) = {
-      val n = vintLen(o)
-      if (n < 1 || n > 8 || o + n > b.length) return (-2L, 0)
-      var v = (b(o) & 0xff & (0xff >>> n)).toLong
-      var i = 1
-      while (i < n) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-      (if (v == (1L << (7 * n)) - 1) -1L else v, n)
-    }
+    if (!Ebml.isEbml(b)) return None
     var title: String = null
     var artist: String = null
     var album: String = null
@@ -7966,43 +7277,20 @@ object Multimodal {
         }
       tagName = null; tagValue = null
     }
-    def walk(start: Int, end: Int, depth: Int): Unit = {
-      if (depth > 16) return
-      var off = start
-      while (off < end) {
-        val id = readId(off)
-        if (id < 0) return
-        val idLen = vintLen(off)
-        val (size, szLen) = readSize(off + idLen)
-        if (szLen == 0) return
-        val body = off + idLen + szLen
-        val isContainer = id match {
-          case 0x18538067L | 0x1254C367L | 0x7373L | 0x67C8L => true
-          case _ => false
-        }
-        val bodyEnd =
-          if (size < 0) { if (isContainer) end else return }
-          else if (size > end - body) { if (isContainer) end else return }
-          else body + size.toInt
-        id match {
-          case _ if isContainer =>
-            if (id == 0x1254C367L) sawTags = true
-            walk(body, bodyEnd, depth + 1)
-            if (id == 0x67C8L) commitSimpleTag()
-          case 0x45A3L => // TagName, UTF-8
-            tagName = new String(b, body, bodyEnd - body,
-              java.nio.charset.StandardCharsets.UTF_8)
-          case 0x4487L => // TagString, UTF-8
-            tagValue = new String(b, body, bodyEnd - body,
-              java.nio.charset.StandardCharsets.UTF_8)
-          case _ => ()
-        }
-        off = bodyEnd
+    new Ebml.Walker(b, 0x18538067L, 0x1254C367L, 0x7373L, 0x67C8L) {
+      override def container(id: Long, body: Int, end: Int): Unit = {
+        if (id == 0x1254C367L) sawTags = true
+        descend(id, body, end)
+        if (id == 0x67C8L) commitSimpleTag()
       }
-    }
-    walk(0, b.length, 0)
+      def leaf(id: Long, body: Int, end: Int): Unit = id match {
+        case 0x45A3L => tagName = Ebml.utf8(b, body, end) // TagName
+        case 0x4487L => tagValue = Ebml.utf8(b, body, end) // TagString
+        case _ => ()
+      }
+    }.walk()
     if (!sawTags) None else Some((title, artist, album, "matroska"))
-  } catch { case _: Throwable => None }
+  } catch { case NonFatal(_) => None }
 
   /** Append a `tags` struct ([[AudioTagsSchema]]) per row: ID3v2 if
     * the bytes lead with one, else the M4A item list, else the Vorbis
@@ -8308,11 +7596,7 @@ object Multimodal {
       nSamples: Long, title: String, artist: String,
       album: String, cover: Option[(String, Array[Byte])] = None,
       lyricsTag: Option[String] = None): Array[Byte] = {
-    def box(id: String, payload: Array[Byte]): Array[Byte] = {
-      val out = java.nio.ByteBuffer.allocate(8 + payload.length)
-      out.putInt(8 + payload.length).put(id.getBytes("ISO-8859-1")).put(payload)
-      out.array()
-    }
+    import Bmff.box
     def atom(id: String, value: String): Array[Byte] =
       box(id, box("data",
         Array[Byte](0, 0, 0, 1, 0, 0, 0, 0) ++ value.getBytes("UTF-8")))
@@ -9765,13 +9049,9 @@ object Multimodal {
   }
 
   private[graft] def mp4VideoTrack(bytes: Array[Byte]): Option[Mp4Track] = {
-    if (bytes == null || bytes.length < 16 ||
-      !(bytes(4) == 'f' && bytes(5) == 't' && bytes(6) == 'y' && bytes(7) == 'p'))
-      return None
-    @inline def u32(o: Int): Long =
-      ((bytes(o) & 0xFFL) << 24) | ((bytes(o + 1) & 0xFFL) << 16) |
-        ((bytes(o + 2) & 0xFFL) << 8) | (bytes(o + 3) & 0xFFL)
-    @inline def u64(o: Int): Long = (u32(o) << 32) | u32(o + 4)
+    if (!Bmff.isBmff(bytes)) return None
+    @inline def u32(o: Int): Long = Bmff.u32(bytes, o)
+    @inline def u64(o: Int): Long = Bmff.u64(bytes, o)
     val MaxSamples = 100000
     // per-track scratch, reset at each trak
     var codec: String = null
@@ -9797,74 +9077,55 @@ object Multimodal {
       codec = null; timescale = 0; duration = 0L; isVideoTrack = false
       sizes = null; chunkOffsets = null; stscRuns = null; sync = null
     }
-    // depth-capped like its siblings: crafted deep nesting exhausts
-    // the cap, never the task stack
-    def walk(start: Long, end: Long, depth: Int = 0,
-        parent: String = ""): Unit = {
-      if (depth > 16) return
-      var off = start
-      while (found.isEmpty && off + 8 <= end) {
-        val size0 = u32(off.toInt)
-        val id = new String(bytes, off.toInt + 4, 4, "ISO-8859-1")
-        var body = off + 8
-        val boxEnd =
-          if (size0 == 1 && off + 16 <= end) { body = off + 16; off + u64(off.toInt + 8) }
-          else if (size0 == 0) end
-          else off + size0
-        if (boxEnd < body || boxEnd > end) return // malformed: stop
-        val b = body.toInt
-        id match {
-          case "moov" | "mdia" | "minf" | "stbl" =>
-            walk(body, boxEnd, depth + 1, id)
-          case "trak" => walk(body, boxEnd, depth + 1, id); finishTrak()
-          case "mdhd" if b + 4 <= boxEnd =>
-            if (bytes(b) == 1 && b + 32 <= boxEnd) { // version 1
-              timescale = u32(b + 20).toInt; duration = u64(b + 24)
-            } else if (b + 24 <= boxEnd) {
-              timescale = u32(b + 12).toInt; duration = u32(b + 16)
-            }
-            // the spec's "unknown" sentinel (all-ones — fragmented or
-            // live-muxed files) must not divide into a bogus ~82-day
-            // durationMs; 0 is the explicit unknown signal here
-            if (duration == 0xFFFFFFFFL || duration == -1L) duration = 0L
-          // only the mdia-level hdlr names the track's role — real
-          // QuickTime files carry a second (data-handler) hdlr under
-          // minf which must not clobber it
-          case "hdlr" if parent == "mdia" && b + 12 <= boxEnd =>
-            isVideoTrack = new String(bytes, b + 8, 4, "ISO-8859-1") == "vide"
-          case "stsd" if b + 16 <= boxEnd =>
-            codec = new String(bytes, b + 12, 4, "ISO-8859-1")
-          case "stsz" if b + 12 <= boxEnd =>
-            val uniform = u32(b + 4)
-            val n = u32(b + 8)
-            if (n >= 0 && n <= MaxSamples) {
-              if (uniform != 0) sizes = Array.fill(n.toInt)(uniform.toInt)
-              else if (b + 12 + 4L * n <= boxEnd)
-                sizes = Array.tabulate(n.toInt)(i => u32(b + 12 + 4 * i).toInt)
-            }
-          case "stco" if b + 8 <= boxEnd =>
-            val n = u32(b + 4)
-            if (n >= 0 && n <= MaxSamples && b + 8 + 4L * n <= boxEnd)
-              chunkOffsets = Array.tabulate(n.toInt)(i => u32(b + 8 + 4 * i))
-          case "co64" if b + 8 <= boxEnd =>
-            val n = u32(b + 4)
-            if (n >= 0 && n <= MaxSamples && b + 8 + 8L * n <= boxEnd)
-              chunkOffsets = Array.tabulate(n.toInt)(i => u64(b + 8 + 8 * i))
-          case "stsc" if b + 8 <= boxEnd =>
-            val n = u32(b + 4)
-            if (n >= 0 && n <= MaxSamples && b + 8 + 12L * n <= boxEnd)
-              stscRuns = Array.tabulate(n.toInt)(i =>
-                (u32(b + 8 + 12 * i).toInt, u32(b + 12 + 12 * i).toInt))
-          case "stss" if b + 8 <= boxEnd =>
-            val n = u32(b + 4)
-            if (n >= 0 && n <= MaxSamples && b + 8 + 4L * n <= boxEnd)
-              sync = Array.tabulate(n.toInt)(i => u32(b + 8 + 4 * i).toInt)
-          case _ => () // leaf we don't need (mdat, ftyp, tkhd, ...)
-        }
-        off = boxEnd
+    new Bmff.Walker(bytes) {
+      override def done: Boolean = found.isDefined
+      def visit(id: String, b: Int, end: Int): Unit = id match {
+        case "moov" | "mdia" | "minf" | "stbl" => descend(id, b, end)
+        case "trak" => descend(id, b, end); finishTrak()
+        case "mdhd" if b + 4 <= end =>
+          if (bytes(b) == 1 && b + 32 <= end) { // version 1
+            timescale = u32(b + 20).toInt; duration = u64(b + 24)
+          } else if (b + 24 <= end) {
+            timescale = u32(b + 12).toInt; duration = u32(b + 16)
+          }
+          // the spec's "unknown" sentinel (all-ones — fragmented or
+          // live-muxed files) must not divide into a bogus ~82-day
+          // durationMs; 0 is the explicit unknown signal here
+          if (duration == 0xFFFFFFFFL || duration == -1L) duration = 0L
+        // only the mdia-level hdlr names the track's role — real
+        // QuickTime files carry a second (data-handler) hdlr under
+        // minf which must not clobber it
+        case "hdlr" if parent == "mdia" && b + 12 <= end =>
+          isVideoTrack = Bmff.fourcc(bytes, b + 8) == "vide"
+        case "stsd" if b + 16 <= end => codec = Bmff.fourcc(bytes, b + 12)
+        case "stsz" if b + 12 <= end =>
+          val uniform = u32(b + 4)
+          val n = u32(b + 8)
+          if (n >= 0 && n <= MaxSamples) {
+            if (uniform != 0) sizes = Array.fill(n.toInt)(uniform.toInt)
+            else if (b + 12 + 4L * n <= end)
+              sizes = Array.tabulate(n.toInt)(i => u32(b + 12 + 4 * i).toInt)
+          }
+        case "stco" if b + 8 <= end =>
+          val n = u32(b + 4)
+          if (n >= 0 && n <= MaxSamples && b + 8 + 4L * n <= end)
+            chunkOffsets = Array.tabulate(n.toInt)(i => u32(b + 8 + 4 * i))
+        case "co64" if b + 8 <= end =>
+          val n = u32(b + 4)
+          if (n >= 0 && n <= MaxSamples && b + 8 + 8L * n <= end)
+            chunkOffsets = Array.tabulate(n.toInt)(i => u64(b + 8 + 8 * i))
+        case "stsc" if b + 8 <= end =>
+          val n = u32(b + 4)
+          if (n >= 0 && n <= MaxSamples && b + 8 + 12L * n <= end)
+            stscRuns = Array.tabulate(n.toInt)(i =>
+              (u32(b + 8 + 12 * i).toInt, u32(b + 12 + 12 * i).toInt))
+        case "stss" if b + 8 <= end =>
+          val n = u32(b + 4)
+          if (n >= 0 && n <= MaxSamples && b + 8 + 4L * n <= end)
+            sync = Array.tabulate(n.toInt)(i => u32(b + 8 + 4 * i).toInt)
+        case _ => () // leaf we don't need (mdat, ftyp, tkhd, ...)
       }
-    }
-    walk(0L, bytes.length.toLong)
+    }.walk()
     found
   }
 
@@ -10022,15 +9283,10 @@ object Multimodal {
     */
   private[graft] def mp4TextTracks(bytes: Array[Byte],
       decodeCues: Boolean = true): (Seq[Mp4TextTrack], Set[Long]) = try {
-    if (bytes == null || bytes.length < 16 ||
-      !(bytes(4) == 'f' && bytes(5) == 't' && bytes(6) == 'y' && bytes(7) == 'p'))
-      return (Nil, Set.empty)
-    @inline def u16(o: Int): Int =
-      ((bytes(o) & 0xff) << 8) | (bytes(o + 1) & 0xff)
-    @inline def u32(o: Int): Long =
-      ((bytes(o) & 0xFFL) << 24) | ((bytes(o + 1) & 0xFFL) << 16) |
-        ((bytes(o + 2) & 0xFFL) << 8) | (bytes(o + 3) & 0xFFL)
-    @inline def u64(o: Int): Long = (u32(o) << 32) | u32(o + 4)
+    if (!Bmff.isBmff(bytes)) return (Nil, Set.empty)
+    @inline def u16(o: Int): Int = Bmff.u16(bytes, o)
+    @inline def u32(o: Int): Long = Bmff.u32(bytes, o)
+    @inline def u64(o: Int): Long = Bmff.u64(bytes, o)
     val MaxSamples = 100000
     var movieTimescale = 0 // mvhd clock: empty-edit durations tick on it
     var handlerIsText = false
@@ -10197,136 +9453,95 @@ object Multimodal {
       }
       Nil
     }
-    def walk(start: Long, end: Long, depth: Int = 0,
-        parent: String = ""): Unit = {
-      if (depth > 16) return
-      var off = start
-      while (off + 8 <= end) {
-        val size0 = u32(off.toInt)
-        val id = new String(bytes, off.toInt + 4, 4, "ISO-8859-1")
-        var body = off + 8
-        val boxEnd =
-          if (size0 == 1 && off + 16 <= end) { body = off + 16; off + u64(off.toInt + 8) }
-          else if (size0 == 0) end
-          else off + size0
-        if (boxEnd < body || boxEnd > end) return
-        val b = body.toInt
-        id match {
-          case "minf" | "stbl" | "edts" if !decodeCues =>
-            () // declaration-only walk: no sample tables, no edits
-          case "moov" | "mdia" | "minf" | "stbl" | "tref" | "edts" =>
-            walk(body, boxEnd, depth + 1, id)
-          case "trak" => walk(body, boxEnd, depth + 1, id); finishTrak()
-          case "mvhd" if b + 4 <= boxEnd =>
-            if (bytes(b) == 1 && b + 24 <= boxEnd)
-              movieTimescale = u32(b + 20).toInt
-            else if (b + 16 <= boxEnd) movieTimescale = u32(b + 12).toInt
-          case "elst" if b + 8 <= boxEnd =>
-            val v1 = bytes(b) == 1
-            val n = u32(b + 4)
-            val entryLen = if (v1) 20L else 12L
-            if (n >= 0 && n <= 256 && b + 8 + entryLen * n <= boxEnd)
-              elstEntries = Array.tabulate(n.toInt) { i =>
-                val e = b + 8 + (entryLen * i).toInt
-                if (v1) (u64(e), u64(e + 8))
-                else (u32(e), u32(e + 4).toInt.toLong) // i32 media_time
-              }
-          case "tkhd" if b + 4 <= boxEnd =>
-            if (bytes(b) == 1 && b + 24 <= boxEnd) trackId = u32(b + 20)
-            else if (b + 16 <= boxEnd) trackId = u32(b + 12)
-          case "chap" if parent == "tref" =>
-            // tref/chap: ids of THIS trak's chapter tracks
-            var q = b
-            while (q + 4 <= boxEnd) { chapRefs += u32(q); q += 4 }
-          case "mdhd" if b + 4 <= boxEnd =>
-            if (bytes(b) == 1 && b + 34 <= boxEnd) {
-              timescale = u32(b + 20).toInt; langPacked = u16(b + 32)
-            } else if (b + 22 <= boxEnd) {
-              timescale = u32(b + 12).toInt; langPacked = u16(b + 20)
-            }
-          // ONLY the mdia-level hdlr names the track's role: real
-          // QuickTime files carry a SECOND hdlr under minf (the data
-          // handler, 'alis'/'url ') which must not clobber it
-          case "hdlr" if parent == "mdia" && b + 12 <= boxEnd =>
-            val h = new String(bytes, b + 8, 4, "ISO-8859-1")
-            handlerIsText = h == "sbtl" || h == "subt" || h == "text"
-          case "stsd" if b + 16 <= boxEnd =>
-            codec = new String(bytes, b + 12, 4, "ISO-8859-1")
-          case "stts" if b + 8 <= boxEnd =>
-            val n = u32(b + 4)
-            if (n >= 0 && n <= MaxSamples && b + 8 + 8L * n <= boxEnd)
-              sttsRuns = Array.tabulate(n.toInt)(i =>
-                (u32(b + 8 + 8 * i).toInt, u32(b + 12 + 8 * i)))
-          case "stsz" if b + 12 <= boxEnd =>
-            val uniform = u32(b + 4)
-            val n = u32(b + 8)
-            if (n >= 0 && n <= MaxSamples) {
-              if (uniform != 0) sizes = Array.fill(n.toInt)(uniform.toInt)
-              else if (b + 12 + 4L * n <= boxEnd)
-                sizes = Array.tabulate(n.toInt)(i => u32(b + 12 + 4 * i).toInt)
-            }
-          case "stco" if b + 8 <= boxEnd =>
-            val n = u32(b + 4)
-            if (n >= 0 && n <= MaxSamples && b + 8 + 4L * n <= boxEnd)
-              chunkOffsets = Array.tabulate(n.toInt)(i => u32(b + 8 + 4 * i))
-          case "co64" if b + 8 <= boxEnd =>
-            val n = u32(b + 4)
-            if (n >= 0 && n <= MaxSamples && b + 8 + 8L * n <= boxEnd)
-              chunkOffsets = Array.tabulate(n.toInt)(i => u64(b + 8 + 8 * i))
-          case "stsc" if b + 8 <= boxEnd =>
-            val n = u32(b + 4)
-            if (n >= 0 && n <= MaxSamples && b + 8 + 12L * n <= boxEnd)
-              stscRuns = Array.tabulate(n.toInt)(i =>
-                (u32(b + 8 + 12 * i).toInt, u32(b + 12 + 12 * i).toInt))
-          case _ => ()
-        }
-        off = boxEnd
+    // mvhd's movie timescale from the box at `b`
+    def readMvhd(b: Int, end: Int): Unit =
+      if (b + 4 <= end) {
+        if (bytes(b) == 1 && b + 24 <= end) movieTimescale = u32(b + 20).toInt
+        else if (b + 16 <= end) movieTimescale = u32(b + 12).toInt
       }
-    }
     // mvhd PRE-PASS: box order inside moov is not mandated, and a
     // trak may close (decoding its cues, which needs the movie clock
     // for empty-edit delays) before the main walk has met mvhd —
-    // read it first so the edit offset is order-independent
+    // read it first (the first top-level moov's direct children) so
+    // the edit offset is order-independent
     if (decodeCues) {
-      var off = 0L
-      val end = bytes.length.toLong
-      while (movieTimescale == 0 && off + 8 <= end) {
-        val size0 = u32(off.toInt)
-        val id = new String(bytes, off.toInt + 4, 4, "ISO-8859-1")
-        var body = off + 8
-        val boxEnd =
-          if (size0 == 1 && off + 16 <= end) { body = off + 16; off + u64(off.toInt + 8) }
-          else if (size0 == 0) end
-          else off + size0
-        if (boxEnd < body || boxEnd > end) off = end
-        else if (id == "moov") {
-          var q = body
-          while (movieTimescale == 0 && q + 8 <= boxEnd) {
-            val cSize0 = u32(q.toInt)
-            val cId = new String(bytes, q.toInt + 4, 4, "ISO-8859-1")
-            var cBody = q + 8
-            val cEnd =
-              if (cSize0 == 1 && q + 16 <= boxEnd) { cBody = q + 16; q + u64(q.toInt + 8) }
-              else if (cSize0 == 0) boxEnd
-              else q + cSize0
-            if (cEnd < cBody || cEnd > boxEnd) q = boxEnd
-            else {
-              if (cId == "mvhd" && cBody.toInt + 4 <= cEnd) {
-                val b = cBody.toInt
-                if (bytes(b) == 1 && b + 24 <= cEnd)
-                  movieTimescale = u32(b + 20).toInt
-                else if (b + 16 <= cEnd) movieTimescale = u32(b + 12).toInt
-              }
-              q = cEnd
-            }
-          }
-          off = end
-        } else off = boxEnd
-      }
+      var moovSeen = false
+      new Bmff.Walker(bytes) {
+        override def done: Boolean = movieTimescale != 0 || moovSeen
+        def visit(id: String, b: Int, end: Int): Unit =
+          if (parent == "" && id == "moov") { descend(id, b, end); moovSeen = true }
+          else if (parent == "moov" && id == "mvhd") readMvhd(b, end)
+      }.walk()
     }
-    walk(0L, bytes.length.toLong)
+    new Bmff.Walker(bytes) {
+      def visit(id: String, b: Int, end: Int): Unit = id match {
+        case "minf" | "stbl" | "edts" if !decodeCues =>
+          () // declaration-only walk: no sample tables, no edits
+        case "moov" | "mdia" | "minf" | "stbl" | "tref" | "edts" =>
+          descend(id, b, end)
+        case "trak" => descend(id, b, end); finishTrak()
+        case "mvhd" => readMvhd(b, end)
+        case "elst" if b + 8 <= end =>
+          val v1 = bytes(b) == 1
+          val n = u32(b + 4)
+          val entryLen = if (v1) 20L else 12L
+          if (n >= 0 && n <= 256 && b + 8 + entryLen * n <= end)
+            elstEntries = Array.tabulate(n.toInt) { i =>
+              val e = b + 8 + (entryLen * i).toInt
+              if (v1) (u64(e), u64(e + 8))
+              else (u32(e), u32(e + 4).toInt.toLong) // i32 media_time
+            }
+        case "tkhd" if b + 4 <= end =>
+          if (bytes(b) == 1 && b + 24 <= end) trackId = u32(b + 20)
+          else if (b + 16 <= end) trackId = u32(b + 12)
+        case "chap" if parent == "tref" =>
+          // tref/chap: ids of THIS trak's chapter tracks
+          var q = b
+          while (q + 4 <= end) { chapRefs += u32(q); q += 4 }
+        case "mdhd" if b + 4 <= end =>
+          if (bytes(b) == 1 && b + 34 <= end) {
+            timescale = u32(b + 20).toInt; langPacked = u16(b + 32)
+          } else if (b + 22 <= end) {
+            timescale = u32(b + 12).toInt; langPacked = u16(b + 20)
+          }
+        // ONLY the mdia-level hdlr names the track's role: real
+        // QuickTime files carry a SECOND hdlr under minf (the data
+        // handler, 'alis'/'url ') which must not clobber it
+        case "hdlr" if parent == "mdia" && b + 12 <= end =>
+          val h = Bmff.fourcc(bytes, b + 8)
+          handlerIsText = h == "sbtl" || h == "subt" || h == "text"
+        case "stsd" if b + 16 <= end => codec = Bmff.fourcc(bytes, b + 12)
+        case "stts" if b + 8 <= end =>
+          val n = u32(b + 4)
+          if (n >= 0 && n <= MaxSamples && b + 8 + 8L * n <= end)
+            sttsRuns = Array.tabulate(n.toInt)(i =>
+              (u32(b + 8 + 8 * i).toInt, u32(b + 12 + 8 * i)))
+        case "stsz" if b + 12 <= end =>
+          val uniform = u32(b + 4)
+          val n = u32(b + 8)
+          if (n >= 0 && n <= MaxSamples) {
+            if (uniform != 0) sizes = Array.fill(n.toInt)(uniform.toInt)
+            else if (b + 12 + 4L * n <= end)
+              sizes = Array.tabulate(n.toInt)(i => u32(b + 12 + 4 * i).toInt)
+          }
+        case "stco" if b + 8 <= end =>
+          val n = u32(b + 4)
+          if (n >= 0 && n <= MaxSamples && b + 8 + 4L * n <= end)
+            chunkOffsets = Array.tabulate(n.toInt)(i => u32(b + 8 + 4 * i))
+        case "co64" if b + 8 <= end =>
+          val n = u32(b + 4)
+          if (n >= 0 && n <= MaxSamples && b + 8 + 8L * n <= end)
+            chunkOffsets = Array.tabulate(n.toInt)(i => u64(b + 8 + 8 * i))
+        case "stsc" if b + 8 <= end =>
+          val n = u32(b + 4)
+          if (n >= 0 && n <= MaxSamples && b + 8 + 12L * n <= end)
+            stscRuns = Array.tabulate(n.toInt)(i =>
+              (u32(b + 8 + 12 * i).toInt, u32(b + 12 + 12 * i).toInt))
+        case _ => ()
+      }
+    }.walk()
     (tracks.toSeq, chapRefs.toSet)
-  } catch { case _: Throwable => (Nil, Set.empty) } // per-row isolation
+  } catch { case NonFatal(_) => (Nil, Set.empty) } // per-row isolation
 
   /** xxhash64 (seed 42, the built-in `xxhash64` column's) of every
     * keyframe's byte range, hashed IN PLACE over the container buffer
@@ -10495,16 +9710,7 @@ object Multimodal {
     require(frames.nonEmpty, "frames must be non-empty")
     require(syncEvery >= 1, s"syncEvery: $syncEvery")
     require(codec.length == 4, s"codec must be a FourCC: $codec")
-    def box(id: String, payload: Array[Byte]): Array[Byte] = {
-      val out = java.nio.ByteBuffer.allocate(8 + payload.length)
-      out.putInt(8 + payload.length).put(id.getBytes("ISO-8859-1")).put(payload)
-      out.array()
-    }
-    def u32s(vs: Seq[Int]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(4 * vs.length)
-      vs.foreach(bb.putInt)
-      bb.array()
-    }
+    import Bmff.{box, u32s}
     val ftyp = box("ftyp", "isom\u0000\u0000\u0002\u0000isomiso2".getBytes("ISO-8859-1"))
     val mdatPayload = frames.flatten.toArray
     val mdat = box("mdat", mdatPayload)
@@ -10572,16 +9778,7 @@ object Multimodal {
     Seq(lang, lang2).foreach(l =>
       require(l.length == 3 && l.forall(c => c >= 'a' && c <= 'z'),
         s"ISO-639-2 code: $l"))
-    def box(id: String, payload: Array[Byte]): Array[Byte] = {
-      val out = java.nio.ByteBuffer.allocate(8 + payload.length)
-      out.putInt(8 + payload.length).put(id.getBytes("ISO-8859-1")).put(payload)
-      out.array()
-    }
-    def u32s(vs: Seq[Int]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(4 * vs.length)
-      vs.foreach(bb.putInt)
-      bb.array()
-    }
+    import Bmff.{box, u32s}
     def utf8(s: String): Array[Byte] =
       s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     // text samples: (duration ticks == ms at timescale 1000, bytes)

@@ -1,10 +1,10 @@
 package graft.tools
 
 /** Dev tool: single-JVM micro-benchmarks of the hot per-row kernels
-  * (PNG encode / dHash decode+hash / WAV encode / audio hash), so a
-  * "the query is per-task-compute-bound" diagnosis from
-  * [[ProfileQuery]] can be split into its kernel terms without Spark
-  * scheduling noise. Usage: runMain graft.tools.KernelBench [n]
+  * (container walkers / PNG encode / dHash decode+hash / WAV encode /
+  * audio hash), so a "the query is per-task-compute-bound" diagnosis
+  * from [[ProfileQuery]] can be split into its kernel terms without
+  * Spark scheduling noise. Usage: runMain graft.tools.KernelBench [n]
   */
 object KernelBench {
   def main(args: Array[String]): Unit = {
@@ -21,6 +21,36 @@ object KernelBench {
         val gc = x * 9 / 64; if (lightCols(gc)) g(light) else g(dark)
       })
     }
+    // container walkers over the synthetic fixtures: per-call cost of
+    // the EBML / ISO-BMFF / TIFF-IFD header walks, min and median of
+    // 5 rounds of 10n calls after 3 warm-up rounds (one round can end
+    // before C2 has compiled the walk on a loaded box)
+    val webm = M.syntheticWebm("video", width = 64, height = 48,
+      durationMs = 5000L, cuePoints = 50, subtitleTracks = 1,
+      subCues = (0 until 50).map(i => (i * 100L, i * 100L + 80L, s"cue $i")))
+    val mp4 = M.syntheticMjpegMp4(Seq.fill(8)(M.syntheticJpeg(8, 8)),
+      syncEvery = 2)
+    val m4a = M.syntheticM4aTagged(2, 44100, 441000L, "Title", "Artist", "Album")
+    val exif = M.jpegWithExifProvenance(M.syntheticJpeg(8, 8), "Make X",
+      "Model Y", "2020:01:01 00:00:00")
+    def perCall(label: String)(call: => Option[Any]): Unit = {
+      val reps = 10 * n
+      var hits = 0L
+      val us = (0 until 8).map { _ =>
+        val t0 = System.nanoTime()
+        var i = 0
+        while (i < reps) { if (call.isDefined) hits += 1; i += 1 }
+        (System.nanoTime() - t0) / 1e3 / reps
+      }.drop(3).sorted
+      require(hits == 8L * reps, s"$label: fixture must parse")
+      println(f"[kernel] $label: min ${us.head}%.3f / median ${us(2)}%.3f us per call")
+    }
+    perCall("webmInfo")(M.webmInfo(webm))
+    perCall("webmTextTracks")(M.webmTextTracks(webm))
+    perCall("mp4VideoTrack")(M.mp4VideoTrack(mp4))
+    perCall("m4aTags")(M.m4aTags(m4a))
+    perCall("imageProvenance")(M.imageProvenance(exif))
+
     def time(label: String)(body: => Unit): Unit = {
       val t0 = System.nanoTime()
       body

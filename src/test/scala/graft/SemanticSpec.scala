@@ -1144,6 +1144,7 @@ class SemanticSpec extends SparkSpec {
     assert(Multimodal.videoKeyframes(nested(100000)) == null)
     // the round-13 subtitle walker shares the pathology — and the cap
     assert(Multimodal.webmSubtitleCues(nested(100000)).isEmpty)
+    assert(Multimodal.webmPgsBitmaps(nested(100000)).isEmpty)
     // no declared track survives the cap: unknown (null), never a throw
     assert(Multimodal.subtitleTrackCount(nested(100000)) == null)
   }
@@ -1708,6 +1709,9 @@ class SemanticSpec extends SparkSpec {
     val hostileChapters = nestedEbml(
       Array(0x10.toByte, 0x43.toByte, 0xA7.toByte, 0x70.toByte), 100000)
     assert(Multimodal.webmChapters(hostileChapters).isEmpty)
+    val hostileAttachments = nestedEbml(
+      Array(0x19.toByte, 0x41.toByte, 0xA4.toByte, 0x69.toByte), 100000)
+    assert(Multimodal.webmAttachedPicture(hostileAttachments).isEmpty)
     assert(Multimodal.declaredTextLang(hostileTags) == null)
     // a hostile cue stream through the DataFrame dispatch: the scan
     // completes with zero cue rows, the task never dies
@@ -2178,6 +2182,14 @@ class SemanticSpec extends SparkSpec {
     // (DecodedSchema order: ok is field 6, width field 0)
     assert(M.decodeMp4(withSub).getBoolean(6))
     assert(M.decodeMp4(withSub).getInt(0) == 32)
+    // a 64-bit largesize `mdat` ahead of `moov` (the layout of long
+    // recordings) is read like any other box, not as the walk's end
+    val ftypLen = java.nio.ByteBuffer.wrap(plain, 0, 4).getInt
+    val largeMdat = java.nio.ByteBuffer.allocate(16 + 5).putInt(1)
+      .put("mdat".getBytes("ISO-8859-1")).putLong(16L + 5).array()
+    val mdatFirst = plain.take(ftypLen) ++ largeMdat ++ plain.drop(ftypLen)
+    assert(M.decodeMp4(mdatFirst).getBoolean(6))
+    assert(M.decodeMp4(mdatFirst).getInt(0) == 32)
     val webm = M.syntheticWebm("video", width = 8, height = 8,
       durationMs = 100L, subtitleTracks = 2)
     assert(M.subtitleTrackCount(webm) == 2)
@@ -2643,11 +2655,7 @@ class SemanticSpec extends SparkSpec {
     def gray(v: Int): Int = (v << 16) | (v << 8) | v
     // 1) a REAL QuickTime layout carries a SECOND hdlr under minf
     //    (the data handler) — it must not clobber the track's role
-    def box(id: String, p: Array[Byte]): Array[Byte] = {
-      val out = java.nio.ByteBuffer.allocate(8 + p.length)
-      out.putInt(8 + p.length).put(id.getBytes("ISO-8859-1")).put(p)
-      out.array()
-    }
+    import graft.operators.Bmff.box
     val base = M.syntheticMp4TimedText(
       Seq(M.renderJpeg(8, 8, (_, _) => gray(70))),
       Seq((0L, 500L, "qt line")))
@@ -2687,19 +2695,7 @@ class SemanticSpec extends SparkSpec {
     assert(M.subtitleTrackCount(spliced) == 1)
     // 2) nested ChapterAtoms: parent AND child both commit, once each
     //    (hand-built: an atom containing a sub-atom)
-    def el(id: Long, payload: Array[Byte]): Array[Byte] = {
-      val n = (64 - java.lang.Long.numberOfLeadingZeros(id) + 7) / 8
-      val idB = Array.tabulate(n.toInt)(i => ((id >> (8 * (n - 1 - i))) & 0xff).toByte)
-      idB ++ Array((0x10 | (payload.length >> 24)).toByte,
-        ((payload.length >> 16) & 0xff).toByte,
-        ((payload.length >> 8) & 0xff).toByte,
-        (payload.length & 0xff).toByte) ++ payload
-    }
-    def uintEl(id: Long, v: Long): Array[Byte] = {
-      var n = 1
-      while (n < 8 && (v >>> (8 * n)) != 0) n += 1
-      el(id, Array.tabulate(n)(i => ((v >> (8 * (n - 1 - i))) & 0xff).toByte))
-    }
+    import graft.operators.Ebml.{el, uintEl}
     def disp(t: String): Array[Byte] =
       el(0x80L, el(0x85L, t.getBytes("UTF-8")))
     val child = el(0xB6L, uintEl(0x91L, 10000L * 1000000L) ++
@@ -3317,14 +3313,7 @@ class SemanticSpec extends SparkSpec {
 
   test("webmTextTracks: a redeclared TrackNumber registers once, never twice") {
     val M = Multimodal
-    def idBytes(id: Long): Array[Byte] = {
-      val n = (64 - java.lang.Long.numberOfLeadingZeros(id) + 7) / 8
-      Array.tabulate(n)(i => ((id >> (8 * (n - 1 - i))) & 0xff).toByte)
-    }
-    def el(id: Long, p: Array[Byte]): Array[Byte] =
-      idBytes(id) ++ Array((0x10 | (p.length >> 24)).toByte,
-        ((p.length >> 16) & 0xff).toByte, ((p.length >> 8) & 0xff).toByte,
-        (p.length & 0xff).toByte) ++ p
+    import graft.operators.Ebml.el
     def track(num: Long, lang: String): Array[Byte] =
       el(0xAEL, el(0xD7L, Array(num.toByte)) ++
         el(0x83L, Array(0x11.toByte)) ++
@@ -3374,14 +3363,7 @@ class SemanticSpec extends SparkSpec {
 
   test("WebVTT-in-WebM: 3-line block layout, speaker captured, markup stripped") {
     val M = Multimodal
-    def idBytes(id: Long): Array[Byte] = {
-      val n = (64 - java.lang.Long.numberOfLeadingZeros(id) + 7) / 8
-      Array.tabulate(n)(i => ((id >> (8 * (n - 1 - i))) & 0xff).toByte)
-    }
-    def el(id: Long, p: Array[Byte]): Array[Byte] =
-      idBytes(id) ++ Array((0x10 | (p.length >> 24)).toByte,
-        ((p.length >> 16) & 0xff).toByte, ((p.length >> 8) & 0xff).toByte,
-        (p.length & 0xff).toByte) ++ p
+    import graft.operators.Ebml.el
     val track = el(0xAEL, el(0xD7L, Array(3.toByte)) ++
       el(0x83L, Array(0x11.toByte)) ++
       el(0x86L, "S_TEXT/WEBVTT".getBytes("ISO-8859-1")) ++
